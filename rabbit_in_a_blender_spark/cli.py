@@ -960,6 +960,7 @@ def _corpus_mix(args, cfg) -> int:
 def _corpus_search(args, cfg) -> int:
     """User-facing BM25 search (`ext/retrieval.py`): the postings
     aggregate is the index, built in-session — no external service."""
+    from .core.caching import local_frame
     from .core.session import get_spark
     from .ext.retrieval import bm25_topk
 
@@ -985,8 +986,8 @@ def _corpus_search(args, cfg) -> int:
         if c not in docs.columns:
             raise SystemExit(f"column {c!r} not in {src} ({docs.columns})")
 
-    queries = spark.createDataFrame(
-        [(i, q) for i, q in enumerate(args.query)], "qid int, qtext string"
+    queries = local_frame(
+        spark, list(enumerate(args.query)), "qid int, qtext string"
     )
     hits = bm25_topk(
         docs, queries, args.id_col, args.text_col, "qid", "qtext",
@@ -1971,6 +1972,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     # Everything below needs Spark + a warehouse.
+    from .core.caching import local_frame
     from .core.session import get_spark
     from .pipeline.warehouse import Warehouse
 
@@ -2113,7 +2115,7 @@ def main(argv: list[str] | None = None) -> int:
         for tname in sorted(registry.tables):
             if not wh.exists("omop", tname):
                 wh.write(
-                    spark.createDataFrame([], registry[tname].schema()), "omop", tname
+                    local_frame(spark, [], registry[tname].schema()), "omop", tname
                 )
                 created.append(tname)
         print(f"created {len(created)} empty OMOP tables in {wh_root}/omop")

@@ -13,48 +13,60 @@ RESULT frame via :func:`track_cache`; loop callers release them with
 :func:`unpersist_intermediates` after materializing (collect/write).
 The result frames stay valid afterwards — they just recompute if
 re-used.
+
+Frames that should NOT run in the engine at all — metadata-sized rows
+already on the driver — are built by :func:`local_frame`, the one
+DataFrame-from-driver-rows builder in the package.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import datetime
+from collections.abc import Sequence
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
-def materialize_local(df: DataFrame) -> DataFrame:
-    """Execute a METADATA-SIZED frame once and rebuild it as a
-    driver-side local relation with identical rows and schema.
+def local_frame(
+    spark: SparkSession, rows: Sequence, schema: StructType | str
+) -> DataFrame:
+    """The one builder for a DataFrame from driver-side rows (tuples or
+    Rows, positional against ``schema``, a StructType or DDL string).
 
-    For iterative trainers (Lloyd rounds in ``ext/ivf.py::
-    refine_centroids`` / ``ext/pq.py::train_pq_codebooks``) the
-    per-round model frame is C x d / m x ksub metadata, but leaving it
-    lazy makes iteration i's plan embed iterations 1..i-1 — the
-    optimizer re-plans (and every extra consumer re-EXECUTES) an
-    iterations-deep corpus lineage.  Collapsing each round to a local
-    relation bounds the plan to one round and makes downstream
-    consumption free of recompute — the guide §5 persist/localCheckpoint
-    rationale, minus the executor-memory pin (rows live on the driver,
-    like the broadcast cells these models become anyway).
-
-    Only call this on frames whose row count is bounded by model size,
-    never on corpus-sized data.  The float64 round-trip through
-    ``collect``/``createDataFrame`` is exact, so results are
-    bit-identical to the lazy plan.
-
-    The rebuilt relation is ONE partition (r14, guide §5): a bare
-    ``createDataFrame(list)`` parallelizes into defaultParallelism
-    slices, so every JVM materialization of the "local" model frame
-    (a broadcast build, a scan inside a consumer plan) scheduled a
-    |cores|-task job for metadata-sized rows — profiled at ~0.3 s per
-    job at local[32] in the streaming DSIR sink.  One slice, one task.
-    Values and row order are unchanged.
+    Only for METADATA-SIZED rows — model, mapping and check-metadata
+    tables, empty tables — never corpus-sized data, because the rows
+    live in the plan itself: they reach the JVM as one Arrow table,
+    which Spark keeps as a ``LocalRelation`` (up to
+    ``spark.sql.execution.arrow.localRelationThreshold``, 48 MB by
+    default; above it Spark falls back to a parallelized RDD).
+    Consumers execute it driver-side as a ``LocalTableScan``: a
+    ``collect``, broadcast build or join over it schedules no job, where
+    a ``createDataFrame(list)`` frame costs a zero-I/O job of
+    defaultParallelism tasks per scan.  Values and schema round-trip
+    exactly, so a frame rebuilt from a ``collect`` is bit-identical to
+    the plan it came from.
     """
-    rows = df.collect()
-    spark = df.sparkSession
-    if not rows:
-        return spark.createDataFrame([], df.schema)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), df.schema
-    )
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = []
+    for i, field in enumerate(arrow_schema):
+        values = [r[i] for r in rows]
+        if pa.types.is_timestamp(field.type) and field.type.tz is not None:
+            # naive datetimes are local wall-clock (what collect()
+            # returns and createDataFrame(list) assumes); Arrow takes
+            # the wall-clock of any datetime as UTC
+            values = [
+                None if v is None else v.astimezone(datetime.timezone.utc)
+                for v in values
+            ]
+        columns.append(pa.array(values, type=field.type))
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 def track_cache(df: DataFrame, cached: list[DataFrame]) -> DataFrame:

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..core.caching import track_cache
+from ..core.caching import local_frame, track_cache
 
 #: 2^32 + 1 — maps the 8-hex-char md5 prefix to u in (0, 1) exclusive on
 #: both ends, so ln(-ln(u)) is finite even at the extreme hash values.
@@ -315,14 +315,8 @@ def incremental_dsir_weights(
     sink folds per-batch pyarrow reads of the model files — passes
     dicts and this call schedules ZERO model jobs.  DataFrame inputs
     behave as before (one collect each).  The per-bucket log-ratio
-    table is built as a ``VALUES`` LocalRelation, which the optimizer
-    folds driver-side (``ConvertToLocalRelation`` — verified
-    LocalTableScan in the plan), so the ratio evaluation and its
-    broadcast schedule no job at all; previously each ≤128-row model
-    frame came from ``createDataFrame``, which parallelizes into
-    defaultParallelism slices — FOUR 32-task zero-I/O jobs per
-    micro-batch at local[32] (profiled ~0.3 s each, the per-batch wall
-    of stream_dsir_batch after the r13 algebra move).
+    table and the updated model are ``core.caching.local_frame``
+    relations.
     """
     own_cache: list[DataFrame] = []
     if doc_buckets is None:
@@ -342,7 +336,7 @@ def incremental_dsir_weights(
         updated[b] = updated.get(b, 0) + c
     ttot = sum(t_counts.values())
     rtot = sum(updated.values())
-    pre = _local_counts_relation(
+    pre = local_frame(
         spark,
         [
             (b, t_counts.get(b, 0), updated.get(b, 0))
@@ -366,7 +360,7 @@ def incremental_dsir_weights(
         .groupBy(id_col)
         .agg(F.sum(F.col("cnt") * F.col("ratio_micro")).alias("logw_micro"))
     )
-    updated_raw = _local_counts_relation(
+    updated_raw = local_frame(
         spark, sorted(updated.items()), "bucket long, cnt long"
     )
     return track_cache(weights, own_cache), updated_raw
@@ -392,28 +386,6 @@ def _sum_counts(src) -> dict[int, int]:
             )
         out[int(r["bucket"])] = out.get(int(r["bucket"]), 0) + int(r["cnt"])
     return out
-
-
-def _local_counts_relation(spark, rows, schema: str) -> DataFrame:
-    """A small all-BIGINT rows relation as a true ``VALUES``
-    LocalRelation: consumers (collect, broadcast build) execute it
-    DRIVER-side with zero scheduled jobs, unlike ``createDataFrame``,
-    whose list input parallelizes into defaultParallelism slices and
-    costs one |cores|-task job per materialization (guide §5; the
-    profiled per-batch wall of the streaming DSIR sink).  Integer
-    literals round-trip exactly through SQL text, so values are
-    identical to the createDataFrame path."""
-    if not rows:
-        return spark.createDataFrame([], schema)
-    vals = ",".join(
-        "(" + ",".join(f"{int(v)}L" for v in row) + ")" for row in rows
-    )
-    names = ",".join(s.strip().split()[0] for s in schema.split(","))
-    df = spark.sql(f"SELECT * FROM VALUES {vals} AS t({names})")
-    # the VALUES literals are already BIGINT (the L suffix); this is a
-    # schema-shape assert, not a cast
-    assert [f.name for f in df.schema.fields] == names.split(",")
-    return df
 
 
 #: Sidecar manifest inside a model dir listing every increment tag ever
@@ -573,7 +545,7 @@ def compact_model(spark, model_dir: str) -> int:
     }
     staging = model_dir.rstrip("/") + ".__staging__"
     shutil.rmtree(staging, ignore_errors=True)
-    spark.createDataFrame(rows, "bucket long, cnt long").coalesce(1).write.mode(
+    local_frame(spark, rows, "bucket long, cnt long").coalesce(1).write.mode(
         "overwrite"
     ).parquet(staging)
     with open(os.path.join(staging, _FOLDED_MANIFEST), "w") as fh:

@@ -24,6 +24,7 @@ import logging
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..core.caching import local_frame
 from .similarity import _dot, _norm
 
 log = logging.getLogger("riab_spark.ext.ivf")
@@ -1153,21 +1154,9 @@ def refine_centroids(
             # One collect per round: rebuild as a local relation AND
             # pre-seed the _collect_centroids memo so the next round's
             # assignment (and every downstream consumer of the returned
-            # frame) launches no collect job of its own.  ONE slice
-            # (r14, guide §5): createDataFrame(list) would parallelize
-            # into defaultParallelism slices and every JVM scan of the
-            # model frame (broadcast builds in expr consumers) would
-            # schedule a |cores|-task job for C x d metadata.
+            # frame) launches no collect job of its own.
             rows = cents.collect()
-            spark = cents.sparkSession
-            schema = cents.schema
-            cents = (
-                spark.createDataFrame(
-                    spark.sparkContext.parallelize(rows, 1), schema
-                )
-                if rows
-                else spark.createDataFrame([], schema)
-            )
+            cents = local_frame(cents.sparkSession, rows, cents.schema)
             cents._graft_centroids_np = (
                 (id_col, vec_col), _centroids_np_from_rows(rows)
             )

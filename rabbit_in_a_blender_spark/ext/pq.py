@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..core.caching import local_frame
 from .similarity import _dot, _norm
 
 
@@ -167,19 +168,8 @@ def train_pq_codebooks(
                 F.col("code").cast("int").alias("code"),
                 F.col("subvec").cast("array<double>").alias("subvec"),
             )
-            # ONE slice (r14, guide §5) — same rationale as
-            # refine_centroids' round collapse: a |cores|-slice local
-            # relation costs a |cores|-task job per JVM scan of the
-            # m x ksub metadata.
             rows = sel.collect()
-            spark = books.sparkSession
-            books = (
-                spark.createDataFrame(
-                    spark.sparkContext.parallelize(rows, 1), sel.schema
-                )
-                if rows
-                else spark.createDataFrame([], sel.schema)
-            )
+            books = local_frame(books.sparkSession, rows, sel.schema)
             books_np = _books_np_from_rows(rows)
             books._graft_books_np = books_np
     return books

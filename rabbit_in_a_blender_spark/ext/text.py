@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.caching import local_frame
+
 # Tiny per-language marker lexicons for the n-gram/stopword heuristic.
 # Deterministic and oracle-expressible; swap for fastText/CLD3 offline
 # models via a pandas_udf where accuracy matters.
@@ -337,10 +339,8 @@ def langid_ngram(
         (lang, g, r) for lang, pm in profiles.items() for g, r in pm.items()
     ]
     spark = df.sparkSession
-    prof = spark.createDataFrame(prof_rows, "__lang string, __g string, __lrank int")
-    langs = spark.createDataFrame(
-        [(lang,) for lang in sorted(profiles)], "__lang string"
-    )
+    prof = local_frame(spark, prof_rows, "__lang string, __g string, __lrank int")
+    langs = local_frame(spark, [(lang,) for lang in sorted(profiles)], "__lang string")
     dists = (
         doc_prof.crossJoin(F.broadcast(langs))
         .join(F.broadcast(prof), ["__lang", "__g"], "left")

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
 
+from ..core.caching import local_frame
 from ..core.registry import SchemaRegistry, TableSpec
 from ..mapping.swap import apply_fk_swaps, apply_pk_swap, swap_merge
 from ..mapping.usagi import apply_usagi, duplicate_mappings
@@ -37,6 +38,13 @@ from ..mapping.events import resolve_event_columns
 from ..operators.aggregates import duplicate_groups
 from ..operators.dedup import dedup_keep_first
 from .warehouse import Warehouse
+
+
+#: Row cap for collapsing a usagi mapping frame onto the driver.  Usagi
+#: tables are human-curated and dimension-sized by contract, but the
+#: frame is caller-supplied: one that breaks the contract must not be
+#: collected whole into driver memory, so over the cap it stays lazy.
+USAGI_LOCAL_MAX_ROWS = 100_000
 
 
 class EtlError(RuntimeError):
@@ -427,20 +435,18 @@ class EtlPipeline:
             if usagi is None:
                 upload = upload.withColumn(concept_col, F.lit(0).cast("long"))
                 continue
-            # Collapse the mapping frame to a driver-side local relation
-            # ONCE (r14, guide §5): five consumers scan it below (dup
-            # check, concept check, STCM merge, work-table write, the
-            # apply_usagi broadcast build), and a caller-supplied
-            # createDataFrame frame parallelizes into defaultParallelism
-            # slices — profiled as ~1 s zero-I/O |cores|-task jobs per
-            # consumer per (table, concept col) in the ETL bench.
-            # Mapping tables are human-curated and dimension-sized by
-            # contract (see the single-file-write notes below), the
-            # documented metadata exception to the no-collect rule;
-            # values are unchanged, each consumer now scans one slice.
-            from ..core.caching import materialize_local
-
-            usagi = materialize_local(usagi)
+            # Collapse the mapping frame to a local relation ONCE: five
+            # consumers scan it below (dup check, concept check, STCM
+            # merge, work-table write, the apply_usagi broadcast build).
+            rows = usagi.limit(USAGI_LOCAL_MAX_ROWS + 1).collect()
+            if len(rows) <= USAGI_LOCAL_MAX_ROWS:
+                usagi = local_frame(self.spark, rows, usagi.schema)
+            else:
+                log.warning(
+                    "%s.%s: usagi mapping frame has more than %d rows; "
+                    "kept lazy instead of collapsing it onto the driver",
+                    spec.name, concept_col, USAGI_LOCAL_MAX_ROWS,
+                )
             if self.skip_upload:
                 # checks, STCM merge and the work-table write all live
                 # inside the reference's skipped _apply_usagi_mapping

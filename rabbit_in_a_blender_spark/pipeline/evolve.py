@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core.caching import local_frame
+
 #: target type → source types that widen losslessly into it
 _SAFE_WIDENINGS = {
     T.LongType(): {T.IntegerType(), T.ShortType(), T.ByteType()},
@@ -201,7 +203,7 @@ def migrate_to_registry(
         spec = registry[name]
         target = spec.schema()
         if not wh.exists(zone, name):
-            wh.write(spark.createDataFrame([], target), zone, name)
+            wh.write(local_frame(spark, [], target), zone, name)
             report[name] = ["created"]
             continue
         diff = evolve(

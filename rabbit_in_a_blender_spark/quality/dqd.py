@@ -19,6 +19,7 @@ from collections.abc import Callable, Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..core.caching import local_frame
 from ..pipeline.warehouse import Warehouse
 
 CheckBuilder = Callable[[SparkSession], DataFrame]
@@ -71,7 +72,7 @@ def persist_run(
             df = df.withColumn(c, F.lit(None).cast(t))
     df = df.withColumn("run_id", F.lit(run_id)).select(*RESULT_COLUMNS)
     warehouse.append(df, "dqd", "dqdashboard_results")
-    runs = spark.createDataFrame([(run_id,)], "run_id string").withColumn(
+    runs = local_frame(spark, [(run_id,)], "run_id string").withColumn(
         "run_ts", F.current_timestamp()
     )
     warehouse.append(runs, "dqd", "dqdashboard_runs")

@@ -37,6 +37,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..core.caching import local_frame
 from ..core.registry import SchemaRegistry, spark_type
 
 Reader = Callable[[str], DataFrame | None]
@@ -783,7 +784,7 @@ def run_sweep(
 
     meta = _metadata_rows(registry, read, wanted)
     if meta:
-        frames.append(spark.createDataFrame(meta, RESULT_SCHEMA))
+        frames.append(local_frame(spark, meta, RESULT_SCHEMA))
 
     owns_lookups = lookups is None
     if owns_lookups:

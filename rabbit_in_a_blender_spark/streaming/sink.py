@@ -180,6 +180,7 @@ def stream_dsir_select(
     """
     from ..core.caching import unpersist_intermediates
     from ..ext.dsir import (
+        _sum_counts,
         fold_model_increment,
         hashed_ngram_buckets,
         incremental_dsir_weights,
@@ -194,14 +195,9 @@ def stream_dsir_select(
     # scale (the fixture's target corpus is sub-MB) but unbounded on a
     # long-running stream over a real corpus.  Since r14 the collapsed
     # form is a plain DRIVER-side dict (incremental_dsir_weights takes
-    # dict models): no per-batch scan of a 32-slice local relation —
-    # one of the four profiled |cores|-task zero-I/O jobs every batch
-    # paid at local[32] (guide §5).  Exact integer counts either way.
-    target_counts: dict[int, int] = {}
-    for r in target_model.select("bucket", "cnt").collect():
-        target_counts[int(r["bucket"])] = (
-            target_counts.get(int(r["bucket"]), 0) + int(r["cnt"])
-        )
+    # dict models), so no batch scans a model relation.  Exact integer
+    # counts either way; a NULL row fails here, at construction.
+    target_counts = _sum_counts(target_model)
     # Fold files are immutable once written (atomic tmp+rename, see
     # fold_model_increment), so their CONTENTS are cached across
     # micro-batches keyed by filename — only files newly appeared since

@@ -501,6 +501,42 @@ def test_run_records_step_metrics(spark, wh):
         assert getattr(p, f) >= 0
 
 
+@pytest.mark.parametrize("n_rows,collapsed", [(2, True), (3, False)])
+def test_usagi_collapse_is_capped(spark, wh, monkeypatch, caplog, n_rows, collapsed):
+    """The caller-supplied usagi frame becomes a driver-side local
+    relation only up to USAGI_LOCAL_MAX_ROWS rows; over the cap it stays
+    lazy and the pipeline logs a warning."""
+    import logging
+
+    from rabbit_in_a_blender_spark.pipeline import etl
+
+    monkeypatch.setattr(etl, "USAGI_LOCAL_MAX_ROWS", 2)
+    seen = []
+    real_apply = etl.apply_usagi
+
+    def spy(upload, usagi, *args, **kwargs):
+        seen.append(usagi)
+        return real_apply(upload, usagi, *args, **kwargs)
+
+    monkeypatch.setattr(etl, "apply_usagi", spy)
+    usagi = _usagi(spark).filter(
+        F.col("sourceCode").isin(["GENDER_M", "GENDER_F", "GENDER_U"][:n_rows])
+    )
+    inputs = _inputs(spark)
+    inputs["person"] = TableInputs(
+        uploads=inputs["person"].uploads, usagi={"gender_concept_id": usagi}
+    )
+    with caplog.at_level(logging.WARNING, logger=etl.__name__):
+        EtlPipeline(spark, wh, REGISTRY).run(inputs)
+    assert len(seen) == 1
+    plan = seen[0]._jdf.queryExecution().executedPlan().toString()
+    assert ("LocalTableScan" in plan) == collapsed, plan
+    warned = [r for r in caplog.records if "kept lazy" in r.getMessage()]
+    assert bool(warned) != collapsed
+    person = {r["name"]: r["gender_concept_id"] for r in wh.read(spark, "omop", "person").collect()}
+    assert person["alice"] == 8507 and person["bob"] == 8532
+
+
 def test_bucketed_io_pipeline_matches_plain_and_is_stable(spark, wh):
     """bucketed_io=True (the cluster path) must produce exactly the same
     tables as the plain path, stay id-stable across re-runs, and give the

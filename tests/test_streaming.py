@@ -116,6 +116,8 @@ def test_stateful_running_counts(spark):
 
         deadline = _time.time() + 120
         while _time.time() < deadline:
+            if q.exception() is not None:
+                raise q.exception()
             seen = (
                 spark.table("riab_stateful_test")
                 .groupBy("user_id")
@@ -803,6 +805,30 @@ def test_stream_dsir_select_folds_history_across_batches(spark):
             spark.read.parquet(f"{tmp}/model").agg(F.sum("cnt")).first()[0]
         )
         assert mass2 == mass
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_stream_dsir_select_rejects_null_target_counts(spark):
+    """A corrupt frozen target model (a NULL cnt row) fails when the
+    stream is built, with the model-contract ValueError — not as a bare
+    TypeError inside the first micro-batch."""
+    import pytest
+
+    from rabbit_in_a_blender_spark.streaming.sink import stream_dsir_select
+
+    tmp = tempfile.mkdtemp(prefix="riab_sdsir_null_")
+    try:
+        src = spark.readStream.schema("doc_id long, text string").parquet(tmp)
+        target = spark.createDataFrame([(1, 4), (2, None)], "bucket long, cnt long")
+        with pytest.raises(ValueError, match="NULL bucket or cnt"):
+            stream_dsir_select(
+                src,
+                out_dir=f"{tmp}/out",
+                model_dir=f"{tmp}/model",
+                checkpoint_dir=f"{tmp}/ckpt",
+                target_model=target,
+            )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
