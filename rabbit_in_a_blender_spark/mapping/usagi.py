@@ -10,7 +10,9 @@ concepts legitimately fans out to k rows (§2.J identity contract).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections import Counter
+
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -59,6 +61,21 @@ def duplicate_mappings(usagi: DataFrame, semi: bool = True) -> DataFrame:
         .filter(F.col("dup_count") > 1)
         .orderBy(F.desc("dup_count"), "sourceCode")
     )
+
+
+def duplicate_mapping_rows(rows: list[Row], semi: bool = True) -> list[Row]:
+    """:func:`duplicate_mappings` over usagi rows already on the driver:
+    the same groups, counts and order, with no Spark job."""
+    statuses = APPROVED_STATUSES if semi else ("APPROVED",)
+    counts = Counter(
+        (r["sourceCode"], r["conceptId"])
+        for r in rows
+        if r["mappingStatus"] in statuses
+    )
+    dups = [(code, cid, n) for (code, cid), n in counts.items() if n > 1]
+    # Spark's ascending order puts NULL codes first
+    dups.sort(key=lambda d: (-d[2], d[0] is not None, d[0] or ""))
+    return [Row(sourceCode=c, conceptId=i, dup_count=n) for c, i, n in dups]
 
 
 def apply_usagi(

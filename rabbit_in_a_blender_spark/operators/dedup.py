@@ -20,16 +20,20 @@ def dedup_keep_first(
     df: DataFrame,
     keys: Sequence[str],
     order_by: Sequence | None = None,
+    dup_flag: str | None = None,
 ) -> DataFrame:
     """Keep exactly one row per ``keys``, first by ``order_by``.
+
+    ``dup_flag`` names an extra boolean column, true on a kept row whose
+    key group had a second row (``__rn == 2``): the duplicate-row count
+    then rides on whatever action consumes the frame.
 
     Scale: one shuffle on ``keys``; Spark rewrites rn=1 windows into a
     TakeOrdered-style aggregation under AQE, and skewed keys are split.
     """
     order_by = list(order_by) if order_by else [F.col(c) for c in df.columns]
     w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    df = df.withColumn("__rn", F.row_number().over(w))
+    if dup_flag:
+        df = df.withColumn(dup_flag, F.lead("__rn").over(w).isNotNull())
+    return df.filter(F.col("__rn") == 1).drop("__rn")

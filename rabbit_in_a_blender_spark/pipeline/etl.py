@@ -24,8 +24,9 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
@@ -33,11 +34,13 @@ log = logging.getLogger(__name__)
 from ..core.caching import local_frame
 from ..core.registry import SchemaRegistry, TableSpec
 from ..mapping.swap import apply_fk_swaps, apply_pk_swap, swap_merge
-from ..mapping.usagi import apply_usagi, duplicate_mappings
+from ..mapping.usagi import apply_usagi, duplicate_mapping_rows, duplicate_mappings
 from ..mapping.events import resolve_event_columns
-from ..operators.aggregates import duplicate_groups
+# duplicate_groups stays a module attribute: perfbench/measure.py wraps
+# pipeline.etl.duplicate_groups by name
+from ..operators.aggregates import duplicate_groups  # noqa: F401
 from ..operators.dedup import dedup_keep_first
-from .warehouse import Warehouse
+from .warehouse import Warehouse, cluster_layout
 
 
 #: Row cap for collapsing a usagi mapping frame onto the driver.  Usagi
@@ -131,9 +134,10 @@ class EtlPipeline:
         # shuffle is the bottleneck. Set buckets ~ 2-3x total cores.
         self.bucketed_io = bucketed_io
         self.buckets = buckets
-        # Warning-level checks cost one extra aggregation job per table;
-        # SURVEY §7 rule 8: keep them behind a flag so 100 TB runs can
-        # skip the logging-only materializations the reference always pays.
+        # Inline checks: the usagi concept checks cost extra joins per
+        # mapped column, the duplicate-row warning an observed flag
+        # column on the final write; SURVEY §7 rule 8: keep them behind
+        # a flag so 100 TB runs can skip what the reference always pays.
         self.inline_checks = inline_checks
         # Per-step wall-clock + rows/bytes tally — the Spark analog of
         # the reference's per-query cost/time accounting
@@ -151,6 +155,10 @@ class EtlPipeline:
         # the reference guards the same sections with a global lock
         # (etl/etl.py:427-442, 618-625).
         self._shared_lock = threading.Lock()
+        # (run order, usagi frame) per mapped concept column: merged into
+        # source_to_concept_map by ONE write per run (invalidate_stale_
+        # mappings), not one read-merge-rewrite per column.
+        self._stcm_queue: list[tuple[tuple[int, str, int], DataFrame]] = []
 
     @contextmanager
     def _step(self, name: str):
@@ -362,11 +370,12 @@ class EtlPipeline:
         from computing 3× (swap identities, pk apply, final write) to
         once.  Returns (upload_df, fatal_futures, bookkeeping_futures):
         fatal checks must settle before the final merge (reference raises
-        pre-merge), bookkeeping (STCM record) just needs awaiting before
-        the run ends — they execute on ``pool`` threads so their Spark
-        jobs overlap the main lineage, mirroring the reference's
+        pre-merge), bookkeeping (work-table writes) just needs awaiting
+        before the run ends — they execute on ``pool`` threads so their
+        Spark jobs overlap the main lineage, mirroring the reference's
         per-table worker pool (etl/etl.py:211-238,
-        max_worker_threads_per_table)."""
+        max_worker_threads_per_table).  Each mapped column's usagi frame
+        is queued for the run's one source_to_concept_map write."""
         if not inputs.uploads:
             raise EtlError(f"{spec.name}: no upload queries")
         upload = inputs.uploads[0]
@@ -378,6 +387,12 @@ class EtlPipeline:
         # omop.concept dimension, patch unmapped usagi rows (M2).
         usagi_patched = dict(inputs.usagi)
         fatal, bookkeeping = [], []
+
+        def _later(futures, fn, *args):
+            if pool is None:
+                fn(*args)
+            else:
+                futures.append(pool.submit(fn, *args))
         if self.skip_upload:
             # Reference -s path (etl/etl.py:211): reuse the persisted
             # work.{t}__{col}__usagi tables from the previous run —
@@ -400,28 +415,34 @@ class EtlPipeline:
             # Persist the custom-concept upload (reference's
             # work.{t}__{col}_custom_concept tables): cleanup uses it to
             # remove this table's contributions from omop.concept.
-            # mapping-table-sized by contract → single-file write.
-            # repartition(1), NOT coalesce(1): coalescing an Arrow local
-            # relation to one partition serializes all source partitions
-            # through one task's Arrow conversion (measured ~10x slower);
-            # the tiny round-trip shuffle is cheaper.
-            self.wh.write(
-                custom.repartition(1),
+            # mapping-table-sized by contract → single-file write;
+            # coalesce(1) merges the slices without a shuffle.
+            _later(
+                bookkeeping,
+                self.wh.write,
+                custom.coalesce(1),
                 "work",
                 f"{spec.name}__{concept_col}__custom_concepts",
             )
 
-        def _dup_check(concept_col, usagi):
+        def _dup_check(concept_col, dups):
             # duplicate mappings are fatal like the reference
             # (etl/bigquery/etl.py:282-297)
-            dups = duplicate_mappings(usagi, semi=self.semi).limit(5).collect()
             if dups:
                 raise EtlError(
                     f"{spec.name}.{concept_col}: duplicate usagi mappings {dups}"
                 )
 
+        def _lazy_dup_check(concept_col, usagi):
+            dups = duplicate_mappings(usagi, semi=self.semi).limit(5).collect()
+            _dup_check(concept_col, dups)
+
         disc_cols = set(spec.event_cols.values())
-        for concept_col in spec.concept_cols:
+        levels = self.registry.dependency_levels()
+        level = next(
+            (i for i, lvl in enumerate(levels) if spec.name in lvl), len(levels)
+        )
+        for col_idx, concept_col in enumerate(spec.concept_cols):
             # Event discriminators (episode_event_field_concept_id,
             # cost_type_concept_id) carry the target TABLE NAME string
             # until stage 2 rewrites them to field-concept ids
@@ -435,11 +456,13 @@ class EtlPipeline:
             if usagi is None:
                 upload = upload.withColumn(concept_col, F.lit(0).cast("long"))
                 continue
-            # Collapse the mapping frame to a local relation ONCE: five
-            # consumers scan it below (dup check, concept check, STCM
+            # Collapse the mapping frame to a local relation ONCE: the
+            # duplicate check runs on the collected rows, and four
+            # consumers scan the relation below (concept check, STCM
             # merge, work-table write, the apply_usagi broadcast build).
             rows = usagi.limit(USAGI_LOCAL_MAX_ROWS + 1).collect()
-            if len(rows) <= USAGI_LOCAL_MAX_ROWS:
+            collapsed = len(rows) <= USAGI_LOCAL_MAX_ROWS
+            if collapsed:
                 usagi = local_frame(self.spark, rows, usagi.schema)
             else:
                 log.warning(
@@ -447,38 +470,34 @@ class EtlPipeline:
                     "kept lazy instead of collapsing it onto the driver",
                     spec.name, concept_col, USAGI_LOCAL_MAX_ROWS,
                 )
-            if self.skip_upload:
-                # checks, STCM merge and the work-table write all live
-                # inside the reference's skipped _apply_usagi_mapping
-                pass
-            elif pool is not None:
-                fatal.append(pool.submit(_dup_check, concept_col, usagi))
-                fatal.append(
-                    pool.submit(
-                        self._check_usagi_concepts,
-                        spec.name,
-                        concept_col,
-                        usagi,
-                        inputs.allowed_domains.get(concept_col),
-                    )
-                )
-                bookkeeping.append(
-                    pool.submit(self._record_source_to_concept_map, usagi, etl_start)
-                )
-            else:
-                _dup_check(concept_col, usagi)
-                self._check_usagi_concepts(
-                    spec.name, concept_col, usagi, inputs.allowed_domains.get(concept_col)
-                )
-                self._record_source_to_concept_map(usagi, etl_start)
+            # checks, STCM merge and the work-table write all live inside
+            # the reference's skipped _apply_usagi_mapping
             if not self.skip_upload:
+                if collapsed:
+                    _dup_check(
+                        concept_col, duplicate_mapping_rows(rows, semi=self.semi)[:5]
+                    )
+                else:
+                    _later(fatal, _lazy_dup_check, concept_col, usagi)
+                _later(
+                    fatal,
+                    self._check_usagi_concepts,
+                    spec.name,
+                    concept_col,
+                    usagi,
+                    inputs.allowed_domains.get(concept_col),
+                )
+                self._stcm_queue.append(((level, spec.name, col_idx), usagi))
                 # Persist the usagi upload (reference's work.{t}__{col}_usagi
                 # tables): resumability/audit + per-table cleanup of the
-                # source_to_concept_map.
-                # human-curated CSVs: dimension-sized → single-file write
-                # (repartition, not coalesce — see custom-concepts note)
-                self.wh.write(
-                    usagi.repartition(1), "work", f"{spec.name}__{concept_col}__usagi"
+                # source_to_concept_map.  Human-curated CSVs are
+                # dimension-sized → single-file write (see custom concepts).
+                _later(
+                    bookkeeping,
+                    self.wh.write,
+                    usagi.coalesce(1),
+                    "work",
+                    f"{spec.name}__{concept_col}__usagi",
                 )
             upload = apply_usagi(
                 upload,
@@ -575,37 +594,45 @@ class EtlPipeline:
             if fk_swaps:
                 upload = apply_fk_swaps(upload, fk_swaps, required)
 
-            # Final windowed dedup (W3): one row per (pk, concepts, events) —
-            # preceded by the reference's duplicate-row warning (G1,
-            # bq:etl/{omop_work_table}_merge_check_for_duplicate_rows:3-63),
-            # which is logging-only and runs on a pool thread overlapping
-            # the final write.
+            # Final windowed dedup (W3): one row per (pk, concepts, events).
+            # The reference's duplicate-row warning (G1,
+            # bq:etl/{omop_work_table}_merge_check_for_duplicate_rows:3-63)
+            # is logging-only: a flag on each kept row whose group had a
+            # second row, counted by an Observation on the final write.
+            flag = "__dup" if spec.pk and self.inline_checks else None
             if spec.pk:
                 keys = [spec.pk, *spec.concept_cols, *spec.event_cols]
-                if self.inline_checks:
-                    pre_dedup = upload
-
-                    def _dup_warning():
-                        dups = duplicate_groups(pre_dedup, keys).limit(100).collect()
-                        if dups:
-                            log.warning(
-                                "%s: %d duplicate row group(s) before merge, e.g. %s",
-                                spec.name,
-                                len(dups),
-                                dups[:3],
-                            )
-
-                    bookkeeping.append(pool.submit(_dup_warning))
-                upload = dedup_keep_first(upload, keys)
+                upload = dedup_keep_first(upload, keys, dup_flag=flag)
 
             # Fatal checks settle BEFORE the final merge (reference order);
             # bookkeeping settles before returning.
             for f in fatal:
                 f.result()
             zone = "work" if spec.event_cols else "omop"
-            self.wh.write(upload, zone, spec.name, cluster_by=spec.cluster_by)
+            # the layout goes BELOW the observation: cluster_by's range
+            # sampling job re-runs everything under it
+            out = cluster_layout(upload, spec.cluster_by)
+            if flag:
+                dups = Observation()
+                out = out.observe(
+                    dups,
+                    F.count_if(F.col(flag)).alias("groups"),
+                    F.min(F.when(F.col(flag), F.struct(*keys))).alias("example"),
+                ).drop(flag)
+                upload = upload.drop(flag)
+            self.wh.write(out, zone, spec.name)
+            seen = dups.get if flag else {}
+            if seen.get("groups"):
+                log.warning(
+                    "%s: %d duplicate row group(s) before merge, e.g. %s",
+                    spec.name,
+                    seen["groups"],
+                    seen["example"],
+                )
             for f in bookkeeping:
                 f.result()
+            if own_pool:
+                self._merge_source_to_concept_map(etl_start, invalidate=False)
             return upload
         finally:
             if own_pool:
@@ -730,11 +757,15 @@ class EtlPipeline:
         keyed on (source_id, omop_table) would rewrite the whole
         fact-sized map once per table (O(tables × map) at 100 TB).
         Readers get `omop_table` back via partition discovery, and
-        per-table lineage lookups prune to one directory."""
+        per-table lineage lookups prune to one directory.
+
+        No DISTINCT: ``y`` is unique per swap row — ``assign_ids``
+        numbers distinct identities, and re-runs continue above MAX(y) —
+        so the (x, y) pairs are already distinct."""
         rows = swap.select(
             F.col("x").cast("string").alias("source_id"),
             F.col("y").cast("long").alias("omop_id"),
-        ).distinct()
+        )
         self.wh.write(rows, "work", f"{self.ID_MAP}/omop_table={table}")
 
     def remove_id_map_entries(self, table: str) -> None:
@@ -744,77 +775,103 @@ class EtlPipeline:
 
     STCM = "source_to_concept_map"
 
-    def _record_source_to_concept_map(
-        self, usagi: DataFrame, etl_start: str | None
-    ) -> None:
-        """J10 (bq:etl/SOURCE_TO_CONCEPT_MAP_merge.sql.jinja:3-33): merge
-        approved mappings into omop.source_to_concept_map, refreshing
-        valid_start_date so re-confirmed mappings survive invalidation.
+    def _stcm_rows(self, usagis: list[DataFrame], start) -> DataFrame:
+        """The frames' approved mappings as source_to_concept_map rows.
+        A key that several frames carry keeps the rows of the LAST frame
+        — what one merge_upsert per frame in that order would leave
+        (their equi-join never matches a NULL key, so NULL-keyed rows of
+        every frame survive).
 
         Deviation noted: the reference INNER JOINs omop.concept to fetch
         target_vocabulary_id (dropping mappings to unknown concepts); we
         LEFT JOIN so the map stays useful without a vocabulary load —
         unknown targets carry a NULL vocabulary and the fkDomain/isForeignKey
         checks flag them instead."""
+        statuses = ["APPROVED", "SEMI-APPROVED"] if self.semi else ["APPROVED"]
+        rows = reduce(
+            DataFrame.unionByName,
+            [
+                u.filter(F.col("mappingStatus").isin(statuses)).select(
+                    "sourceCode",
+                    "sourceName",
+                    F.col("conceptId").cast("long").alias("conceptId"),
+                    F.lit(i).alias("__ord"),
+                )
+                for i, u in enumerate(usagis)
+            ],
+        )
+        last = F.max("__ord").over(Window.partitionBy("sourceCode", "conceptId"))
+        rows = rows.withColumn("__last", last).filter(
+            F.col("sourceCode").isNull()
+            | F.col("conceptId").isNull()
+            | (F.col("__ord") == F.col("__last"))
+        )
+        if self.wh.exists("omop", "concept"):
+            vocab = self.wh.read(self.spark, "omop", "concept").select(
+                F.col("concept_id").alias("__cid"),
+                F.col("vocabulary_id").alias("__voc"),
+            )
+            rows = rows.join(vocab, rows["conceptId"] == F.col("__cid"), "left")
+        else:
+            rows = rows.withColumn("__voc", F.lit(None).cast("string"))
+        return rows.select(
+            F.col("sourceCode").alias("source_code"),
+            F.lit(0).cast("long").alias("source_concept_id"),
+            F.lit("").alias("source_vocabulary_id"),
+            F.col("sourceName").alias("source_code_description"),
+            F.col("conceptId").alias("target_concept_id"),
+            F.col("__voc").alias("target_vocabulary_id"),
+            start.alias("valid_start_date"),
+            F.lit("2099-12-31").cast("date").alias("valid_end_date"),
+            F.lit(None).cast("string").alias("invalid_reason"),
+            "__ord",
+        ).distinct().drop("__ord")
+
+    def _merge_source_to_concept_map(
+        self, etl_start: str | None, invalidate: bool
+    ) -> None:
+        """J10 (bq:etl/SOURCE_TO_CONCEPT_MAP_merge.sql.jinja:3-33) for
+        every queued usagi frame, in run order (level, table, concept
+        column), as ONE write: approved mappings are merged into
+        omop.source_to_concept_map, refreshing valid_start_date so
+        re-confirmed mappings survive invalidation; with ``invalidate``
+        the same write also applies M1 (see
+        :meth:`invalidate_stale_mappings`)."""
         from ..operators.joins import merge_upsert
 
+        queued = [u for _, u in sorted(self._stcm_queue, key=lambda q: q[0])]
+        self._stcm_queue = []
         start = F.lit(etl_start).cast("date") if etl_start else F.current_date()
         # Both shared-table reads (omop.concept for the vocab lookup, the
         # STCM target) and the write that consumes them stay inside one
         # lock scope — sibling threads atomically replace these tables.
         with self._shared_lock:
-            vocab = None
-            if self.wh.exists("omop", "concept"):
-                vocab = self.wh.read(self.spark, "omop", "concept").select(
-                    F.col("concept_id").alias("__cid"),
-                    F.col("vocabulary_id").alias("__voc"),
-                )
-            statuses = (
-                ["APPROVED", "SEMI-APPROVED"] if self.semi else ["APPROVED"]
-            )
-            rows = usagi.filter(F.col("mappingStatus").isin(statuses))
-            if vocab is not None:
-                rows = rows.join(
-                    vocab, rows["conceptId"] == F.col("__cid"), "left"
-                )
-            else:
-                rows = rows.withColumn("__voc", F.lit(None).cast("string"))
-            rows = rows.select(
-                F.col("sourceCode").alias("source_code"),
-                F.lit(0).cast("long").alias("source_concept_id"),
-                F.lit("").alias("source_vocabulary_id"),
-                F.col("sourceName").alias("source_code_description"),
-                F.col("conceptId").cast("long").alias("target_concept_id"),
-                F.col("__voc").alias("target_vocabulary_id"),
-                start.alias("valid_start_date"),
-                F.lit("2099-12-31").cast("date").alias("valid_end_date"),
-                F.lit(None).cast("string").alias("invalid_reason"),
-            ).distinct()
-            if self.wh.exists("omop", self.STCM):
+            exists = self.wh.exists("omop", self.STCM)
+            if not queued and not (invalidate and exists):
+                return
+            rows = self._stcm_rows(queued, start) if queued else None
+            if exists:
                 target = self.wh.read(self.spark, "omop", self.STCM)
-                rows = merge_upsert(
-                    target, rows, ["source_code", "target_concept_id"]
+                rows = (
+                    target
+                    if rows is None
+                    else merge_upsert(target, rows, ["source_code", "target_concept_id"])
+                )
+            if invalidate:
+                rows = rows.withColumn(
+                    "invalid_reason",
+                    F.when(F.col("valid_start_date") < start, F.lit("D")).otherwise(
+                        F.col("invalid_reason")
+                    ),
                 )
             self.wh.write(rows, "omop", self.STCM)
 
     def invalidate_stale_mappings(self, etl_start: str | None = None) -> None:
         """M1 (bq:etl/SOURCE_TO_CONCEPT_MAP_update_invalid_reason.sql.jinja):
         mappings not re-confirmed this run (valid_start_date < etl_start)
-        get invalid_reason='D'."""
-        if not self.wh.exists("omop", self.STCM):
-            return
-        start = F.lit(etl_start).cast("date") if etl_start else F.current_date()
-        df = self.wh.read(self.spark, "omop", self.STCM)
-        self.wh.write(
-            df.withColumn(
-                "invalid_reason",
-                F.when(F.col("valid_start_date") < start, F.lit("D")).otherwise(
-                    F.col("invalid_reason")
-                ),
-            ),
-            "omop",
-            self.STCM,
-        )
+        get invalid_reason='D' — written together with the run's queued
+        source_to_concept_map merge."""
+        self._merge_source_to_concept_map(etl_start, invalidate=True)
 
     # -- stage 2 ----------------------------------------------------------
     def run_stage2(self, spec: TableSpec) -> DataFrame | None:
@@ -853,6 +910,8 @@ class EtlPipeline:
         """
         processed: list[str] = []
         prefetched: dict[str, object] = {}
+        # the STCM merge records THIS run's mappings only
+        self._stcm_queue = []
         first_metric = len(self.metrics)
         min_job_id = self._next_job_id() if self.io_metrics else 0
 

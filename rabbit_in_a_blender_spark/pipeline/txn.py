@@ -351,7 +351,7 @@ def read_snapshot(
             f"transaction {txn} does not include {key}; tables: "
             f"{sorted(tables)}"
         )
-    return spark.read.parquet(_vdir(wh.path(zone, table), tables[key]))
+    return wh.read_version_dir(spark, _vdir(wh.path(zone, table), tables[key]))
 
 
 def txn_recover(wh) -> dict[str, int]:

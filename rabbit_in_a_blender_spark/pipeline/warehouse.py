@@ -15,8 +15,57 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 ZONES = ("raw", "work", "omop", "dqd", "achilles")
+
+
+def _as_read(dt: T.DataType) -> T.DataType:
+    """The type a parquet read reports for a column written as ``dt``:
+    Spark reads every field back nullable (its ``asNullable``)."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_read(f.dataType), True, f.metadata)
+             for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_read(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_read(dt.keyType), _as_read(dt.valueType), True)
+    return dt
+
+
+def cluster_layout(
+    df: DataFrame,
+    cluster_by: list[str] | None = None,
+    zorder_by: list[str] | None = None,
+) -> DataFrame:
+    """The file layout ``Warehouse.write`` gives a table.
+
+    ``cluster_by`` is the BigQuery CLUSTER BY analog: range-partition
+    + sort on the keys, so each parquet file covers a narrow key range
+    and rowgroup min/max stats prune selective scans.  Range
+    partitioning samples the data, so skewed keys don't produce
+    straggler files the way hash clustering would.  The sample is a job
+    of its own over the child plan: observe metrics ABOVE this layout,
+    or they count the child twice.
+
+    ``zorder_by`` is the multi-dimensional alternative: a Morton-
+    interleaved layout narrows file min/max stats in EVERY z-ordered
+    column (operators/zorder.py), so scans pruned on any of them skip
+    files; cluster_by narrows the leading key only.
+    """
+    if zorder_by:
+        from ..operators.zorder import zorder_layout
+
+        keys = [c for c in zorder_by if c in df.columns]
+        if keys:
+            df = zorder_layout(df, keys)
+    elif cluster_by:
+        keys = [c for c in cluster_by if c in df.columns]
+        if keys:
+            df = df.repartitionByRange(*keys).sortWithinPartitions(*keys)
+    return df
 
 
 class Warehouse:
@@ -64,6 +113,11 @@ class Warehouse:
                 "plain path)"
             )
         self.commit_mode = commit_mode
+        # Schema memo for IMMUTABLE pointer version dirs, keyed by the
+        # resolved dir path: a read with a known schema plans with no
+        # footer-inference job.  Filled by this instance's commits and
+        # first reads; rename-mode paths are mutable and always infer.
+        self._schemas: dict[str, T.StructType] = {}
         if not self._uri:
             os.makedirs(root, exist_ok=True)
         # URI roots: creation is deferred to the first write (the fs
@@ -111,7 +165,32 @@ class Warehouse:
         )
 
     def read(self, spark: SparkSession, zone: str, table: str) -> DataFrame:
-        return spark.read.parquet(self._data_path(zone, table))
+        from ..core.commit import is_pointer_table, resolve_pointer
+
+        p = self.path(zone, table)
+        if is_pointer_table(p):
+            return self.read_version_dir(spark, resolve_pointer(p))
+        return spark.read.parquet(p)
+
+    def read_version_dir(self, spark: SparkSession, d: str) -> DataFrame:
+        """Read one pointer version dir, with its memoized schema when
+        this instance wrote or already read it."""
+        schema = self._schemas.get(d)
+        if schema is not None:
+            return spark.read.schema(schema).parquet(d)
+        df = spark.read.parquet(d)
+        self._schemas[d] = df.schema
+        return df
+
+    def _commit(self, df: DataFrame, target: str, keep: int | None = None) -> None:
+        """``pointer_commit`` of ``df`` into ``target``; the new version
+        dir's schema is memoized as a read will report it."""
+        from ..core.commit import _vdir, pointer_commit
+
+        v = pointer_commit(
+            lambda d: df.write.mode("overwrite").parquet(d), target, keep=keep
+        )
+        self._schemas[_vdir(target, v)] = _as_read(df.schema)
 
     def write(
         self,
@@ -130,29 +209,11 @@ class Warehouse:
         (the manifest/pointer swap needs only atomic single-object
         replace).
 
-        ``cluster_by`` is the BigQuery CLUSTER BY analog: range-partition
-        + sort on the keys, so each parquet file covers a narrow key
-        range and rowgroup min/max stats prune selective scans.  Range
-        partitioning samples the data, so skewed keys don't produce
-        straggler files the way hash clustering would.
+        ``cluster_by`` / ``zorder_by``: see :func:`cluster_layout`.
         """
-        if zorder_by:
-            # multi-dimensional alternative to cluster_by: Morton-
-            # interleaved layout narrows file min/max stats in EVERY
-            # z-ordered column (operators/zorder.py), so scans pruned on
-            # any of them skip files; cluster_by narrows the leading
-            # key only.
-            from ..operators.zorder import zorder_layout
-
-            keys = [c for c in zorder_by if c in df.columns]
-            if keys:
-                df = zorder_layout(df, keys)
-        elif cluster_by:
-            keys = [c for c in cluster_by if c in df.columns]
-            if keys:
-                df = df.repartitionByRange(*keys).sortWithinPartitions(*keys)
+        df = cluster_layout(df, cluster_by, zorder_by)
         target = self.path(zone, table)
-        from ..core.commit import is_pointer_table, pointer_commit
+        from ..core.commit import is_pointer_table
 
         if self.commit_mode == "pointer" or is_pointer_table(target):
             # on-disk format wins over session mode: a rename-mode
@@ -161,9 +222,7 @@ class Warehouse:
             # plain dir (the new version lands first — the plan may
             # lazily read the old loose files — then they're removed)
             was_plain = not is_pointer_table(target)
-            pointer_commit(
-                lambda d: df.write.mode("overwrite").parquet(d), target
-            )
+            self._commit(df, target)
             if was_plain:
                 fs = self._fs()
                 for f in fs.listdir(target):
@@ -193,16 +252,17 @@ class Warehouse:
         old-or-new guarantee covers REPLACES, not appends; batch
         appenders that need exactly-once use their own batch=<id>
         subdir discipline (streaming/sink.py)."""
-        from ..core.commit import is_pointer_table, pointer_commit
+        from ..core.commit import is_pointer_table
 
         target = self.path(zone, table)
         if self.commit_mode == "pointer" or is_pointer_table(target):
             if not is_pointer_table(target):
-                pointer_commit(
-                    lambda d: df.write.mode("overwrite").parquet(d), target
-                )
+                self._commit(df, target)
                 return
-            df.write.mode("append").parquet(self._data_path(zone, table))
+            d = self._data_path(zone, table)
+            # the live dir changes under its name: forget its schema
+            self._schemas.pop(d, None)
+            df.write.mode("append").parquet(d)
             return
         df.write.mode("append").parquet(target)
 
@@ -244,16 +304,9 @@ class Warehouse:
         under (None on the first write).  At most ``keep`` snapshots are
         retained; older ones are pruned.
         """
-        if cluster_by:
-            keys = [c for c in cluster_by if c in df.columns]
-            if keys:
-                df = df.repartitionByRange(*keys).sortWithinPartitions(*keys)
+        df = cluster_layout(df, cluster_by)
         target = self.path(zone, table)
-        from ..core.commit import (
-            current_version,
-            is_pointer_table,
-            pointer_commit,
-        )
+        from ..core.commit import current_version, is_pointer_table
 
         if self.commit_mode == "pointer" or is_pointer_table(target):
             # pointer tables get versioning for free: the outgoing
@@ -264,11 +317,7 @@ class Warehouse:
             # plain write()/compact() calls (keep=None) inherit it
             # instead of pruning to the default 3 (ADVICE r12 item 1).
             prev = current_version(target)
-            pointer_commit(
-                lambda d: df.write.mode("overwrite").parquet(d),
-                target,
-                keep=keep + 1 if keep > 0 else 1,
-            )
+            self._commit(df, target, keep=keep + 1 if keep > 0 else 1)
             return prev
         staging = target + ".__staging__"
         shutil.rmtree(staging, ignore_errors=True)
@@ -313,7 +362,7 @@ class Warehouse:
                     f"{zone}.{table} has no version {version}; "
                     f"available: {avail}"
                 )
-            return spark.read.parquet(d)
+            return self.read_version_dir(spark, d)
         snap = os.path.join(self._snap_dir(zone, table), f"v{version}")
         if not self._fs().isdir(snap):
             raise ValueError(
@@ -670,7 +719,12 @@ class Warehouse:
         return report
 
     def drop(self, zone: str, table: str) -> None:
-        self._fs().delete(self.path(zone, table), recursive=True)
+        p = self.path(zone, table)
+        self._fs().delete(p, recursive=True)
+        # a re-created table reuses version numbers: forget the old dirs
+        prefix = p.rstrip("/") + "/"
+        for d in [d for d in self._schemas if d.startswith(prefix)]:
+            self._schemas.pop(d, None)
 
     def list_tables(self, zone: str) -> list[str]:
         return sorted(
@@ -728,7 +782,7 @@ class SnapshotWarehouse:
                 f"{zone}.{table} is not in transaction {self.txn}; "
                 f"tables: {sorted(self._tables)}"
             )
-        return spark.read.parquet(d)
+        return self._wh.read_version_dir(spark, d)
 
     def list_tables(self, zone: str) -> list[str]:
         prefix = zone + "/"

@@ -309,6 +309,12 @@ def test_source_id_to_omop_id_map(spark, wh):
         for r in wh.read(spark, "work", "source_id_to_omop_id_map").collect()
     }
     assert after == before
+    # the map stores each swap row once (no DISTINCT needed: y is unique
+    # per swap row, and the re-run continued above MAX(y))
+    m = wh.read(spark, "work", "source_id_to_omop_id_map")
+    for t in ("person", "visit", "note"):
+        swap = wh.read(spark, "work", f"{t}__pk_swap")
+        assert m.filter(F.col("omop_table") == t).count() == swap.count() > 0
 
     pipe.remove_id_map_entries("visit")
     left = wh.read(spark, "work", "source_id_to_omop_id_map")
@@ -1021,3 +1027,178 @@ def test_cleanup_seals_manifest_drops_on_pointer_warehouse(spark, tmp_path):
     pipe.run({"person": TableInputs(uploads=[upload])})
     assert "omop/person" in wh.snapshot()
     assert wh.read_snapshot(spark, "omop", "person").count() == 6
+
+
+@pytest.mark.parametrize(
+    "status,semi,cap,raises",
+    [
+        ("APPROVED", True, None, True),
+        ("APPROVED", False, None, True),
+        ("SEMI-APPROVED", True, None, True),
+        ("SEMI-APPROVED", False, None, False),
+        # over the collapse cap the frame stays lazy: the Spark check
+        ("APPROVED", True, 2, True),
+        ("SEMI-APPROVED", False, 2, False),
+    ],
+)
+def test_usagi_duplicate_mapping_is_fatal(
+    spark, wh, monkeypatch, status, semi, cap, raises
+):
+    """A duplicated (sourceCode, conceptId) among the rows that will map
+    is fatal (reference etl/bigquery/etl.py:282-297); SEMI-APPROVED rows
+    map only with process_semi_approved_mappings."""
+    from rabbit_in_a_blender_spark.pipeline import etl
+
+    if cap is not None:
+        monkeypatch.setattr(etl, "USAGI_LOCAL_MAX_ROWS", cap)
+    dup = {
+        "APPROVED": ("GENDER_M", "male", "APPROVED", 8507, "MALE", "Gender"),
+        "SEMI-APPROVED": ("GENDER_X", "other", "SEMI-APPROVED", 1002, "X2", "Gender"),
+    }[status]
+    usagi = _usagi(spark).unionByName(spark.createDataFrame([dup], _usagi(spark).schema))
+    inputs = _inputs(spark)["person"]
+    inputs = TableInputs(uploads=inputs.uploads, usagi={"gender_concept_id": usagi})
+    pipe = EtlPipeline(spark, wh, REGISTRY, process_semi_approved_mappings=semi)
+    if raises:
+        with pytest.raises(EtlError, match=f"duplicate usagi mappings.*{dup[0]}"):
+            pipe.run_table(REGISTRY["person"], inputs)
+        assert not wh.exists("omop", "person")
+    else:
+        pipe.run_table(REGISTRY["person"], inputs)
+        assert wh.exists("omop", "person")
+
+
+def test_duplicate_row_warning_counts_groups_once(spark, wh, caplog):
+    """The duplicate-row warning (G1) comes from an Observation on the
+    table's own write.  With cluster_by, the write's range partitioning
+    runs a sampling job over the plan below it; the count must still be
+    exactly the number of planted duplicate groups."""
+    import logging
+
+    from rabbit_in_a_blender_spark.pipeline import etl
+
+    registry = SchemaRegistry(
+        [
+            TableSpec(
+                name="person",
+                columns=[
+                    ColumnSpec("person_id", "int64", required=True),
+                    ColumnSpec("name", "string"),
+                ],
+                pk="person_id",
+                cluster_by=["person_id"],
+            ),
+        ]
+    )
+    k = 3
+    rows = [(f"PK_{i:03d}", f"name{i}") for i in range(60)]
+    # same pk, different payload: survives the upload DISTINCT and forms
+    # one duplicate group at the final dedup
+    rows += [(f"PK_{i:03d}", f"other{i}") for i in (5, 17, 42)[:k]]
+    upload = spark.createDataFrame(rows, "person_id string, name string").repartition(4)
+    with caplog.at_level(logging.WARNING, logger=etl.__name__):
+        EtlPipeline(spark, wh, registry).run({"person": TableInputs(uploads=[upload])})
+    warned = [r.getMessage() for r in caplog.records if "duplicate row group" in r.getMessage()]
+    assert len(warned) == 1, warned
+    assert warned[0].startswith(f"person: {k} duplicate row group(s) before merge"), warned
+    assert wh.read(spark, "omop", "person").count() == 60
+
+    # no duplicates → no warning
+    caplog.clear()
+    clean = spark.createDataFrame(rows[:60], "person_id string, name string")
+    with caplog.at_level(logging.WARNING, logger=etl.__name__):
+        EtlPipeline(spark, wh, registry).run({"person": TableInputs(uploads=[clean])})
+    assert not [r for r in caplog.records if "duplicate row group" in r.getMessage()]
+
+
+def _max_job_id(spark) -> int:
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    return max((int(jobs.apply(i).jobId()) for i in range(jobs.size())), default=-1)
+
+
+#: Spark jobs one pointer-mode run of ``_inputs`` may launch.  Recorded
+#: when the source_to_concept_map merge became one write per run, the
+#: usagi duplicate check moved onto the collected rows, the duplicate-row
+#: warning onto the final write, and reads of version dirs this process
+#: wrote stopped inferring their schema.
+ETL_JOB_BUDGET = 53  # was 84 with one STCM merge per usagi column
+
+
+def test_etl_job_budget_and_schema_memo(spark, tmp_path):
+    """Job count is deterministic where wall time is not: pin it.  Every
+    table the run writes reads back with the memoized schema, which
+    must equal what parquet inference reports; an append into the live
+    version dir forgets it."""
+    import os
+
+    from rabbit_in_a_blender_spark.core.commit import POINTER, resolve_pointer
+
+    wh = Warehouse(str(tmp_path / "budget_wh"), commit_mode="pointer")
+    pipe = EtlPipeline(spark, wh, REGISTRY, io_metrics=False)
+    inputs = _inputs(spark)
+    before = _max_job_id(spark)
+    pipe.run(inputs)
+    jobs = _max_job_id(spark) - before
+    assert jobs <= ETL_JOB_BUDGET, jobs
+
+    tables = sorted(
+        os.path.relpath(d, wh.root)
+        for d, _dirs, files in os.walk(wh.root)
+        if POINTER in files and not os.path.basename(d).startswith("_")
+    )
+    zones = {t.split(os.sep, 1)[0] for t in tables}
+    assert {"omop", "work"} <= zones, tables
+    for t in tables:
+        zone, name = t.split(os.sep, 1)
+        vdir = resolve_pointer(wh.path(zone, name))
+        assert vdir in wh._schemas, t
+        inferred = spark.read.parquet(vdir).schema
+        assert wh._schemas[vdir] == inferred, t
+        assert wh.read(spark, zone, name).schema == inferred, t
+
+    person = wh.read(spark, "omop", "person")
+    vdir = resolve_pointer(wh.path("omop", "person"))
+    wh.append(spark.createDataFrame(person.take(1), person.schema), "omop", "person")
+    assert vdir not in wh._schemas
+    assert wh.read(spark, "omop", "person").count() == 6
+    assert vdir in wh._schemas
+
+
+def test_source_to_concept_map_collisions_resolve_in_run_order(spark, wh):
+    """Two tables of one level map the same (source code, concept): the
+    run's one STCM merge keeps the row of the later table in run order
+    (level, table, concept column), whichever thread finished first."""
+
+    def spec(name):
+        return TableSpec(
+            name=name,
+            columns=[
+                ColumnSpec(f"{name}_id", "int64", required=True),
+                ColumnSpec("kind_concept_id", "int64", required=True),
+            ],
+            pk=f"{name}_id",
+            concept_cols=["kind_concept_id"],
+        )
+
+    registry = SchemaRegistry([spec("beta"), spec("alpha")])
+    assert registry.dependency_levels() == [["alpha", "beta"]]
+
+    def inputs(name):
+        upload = spark.createDataFrame(
+            [(f"{name}1", "K1")], f"{name}_id string, kind_concept_id__source string"
+        )
+        usagi = spark.createDataFrame(
+            [("K1", f"from {name}", "APPROVED", 8507, "MALE", "Gender")],
+            _usagi(spark).schema,
+        )
+        return TableInputs(uploads=[upload], usagi={"kind_concept_id": usagi})
+
+    EtlPipeline(spark, wh, registry).run(
+        {"alpha": inputs("alpha"), "beta": inputs("beta")}, max_parallel_tables=2
+    )
+    rows = wh.read(spark, "omop", "source_to_concept_map").collect()
+    assert [(r["source_code"], r["source_code_description"]) for r in rows] == [
+        ("K1", "from beta")
+    ]
