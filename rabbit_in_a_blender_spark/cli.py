@@ -44,6 +44,16 @@ def _read_config(path: str | None) -> configparser.ConfigParser:
         if not os.path.exists(ini):
             raise SystemExit(f"config file not found: {ini}")
         cfg.read(ini)
+    # every warehouse table is a pointer table (core/commit.py); the
+    # old ``commit_mode = pointer`` line stays valid, anything else
+    # asked for the deleted rename mode
+    mode = cfg.get("warehouse", "commit_mode", fallback="pointer")
+    if mode != "pointer":
+        raise SystemExit(
+            f"[warehouse] commit_mode = {mode}: rename mode is gone — "
+            "every warehouse write is a pointer commit. Remove the line; "
+            "plain table dirs convert on their first write."
+        )
     return cfg
 
 
@@ -476,8 +486,9 @@ def build_parser() -> argparse.ArgumentParser:
     x.add_argument("--compact", metavar="DIR",
                    help="Rewrite an append-decayed parquet directory "
                         "(streaming sink outputs, incremental indexes) "
-                        "into ~--target-file-mb files via a staged "
-                        "atomic swap; prints files before -> after")
+                        "into ~--target-file-mb files via an atomic "
+                        "swap (a pointer commit for warehouse tables); "
+                        "prints files before -> after")
     x.add_argument("--target-file-mb", type=int, default=128,
                    help="With --compact: target output file size "
                         "(default %(default)s MB)")
@@ -489,8 +500,8 @@ def build_parser() -> argparse.ArgumentParser:
                         "preserve the discovered layout automatically")
     x.add_argument("--list-txns", action="store_true",
                    help="Print the warehouse's retained transactions "
-                        "(pipeline/txn.py): each ETL run on a pointer "
-                        "warehouse seals one — id, table count, and "
+                        "(pipeline/txn.py): each ETL run seals one — "
+                        "id, table count, and "
                         "the table->version map of the live one")
     x.add_argument("--txn-recover", action="store_true",
                    help="Reconcile table pointers with the live "
@@ -505,7 +516,7 @@ def build_parser() -> argparse.ArgumentParser:
                         "bytes, atomic per-shard rename; prints the "
                         "shard index")
     x.add_argument("--at-txn", type=int, metavar="N",
-                   help="With -dq/-dqd/-ach on a pointer warehouse: "
+                   help="With -dq/-dqd/-ach: "
                         "read omop tables through transaction N's "
                         "manifest (a frozen consistent view) instead "
                         "of the live pointers — reproducible quality "
@@ -1941,7 +1952,6 @@ def main(argv: list[str] | None = None) -> int:
         return _quality_select(args, cfg)
 
     if args.compact:
-        from .core.commit import is_pointer_table
         from .core.fsio import compact_parquet_dir
 
         spark = _ext_session(cfg)
@@ -1953,9 +1963,6 @@ def main(argv: list[str] | None = None) -> int:
         before, after = compact_parquet_dir(
             spark, args.compact,
             target_file_mb=args.target_file_mb, partition_by=parts,
-            commit_mode=(
-                "pointer" if is_pointer_table(args.compact) else "rename"
-            ),
         )
         print(
             f"compacted {args.compact}: {before} files -> {after} "
@@ -1986,17 +1993,10 @@ def main(argv: list[str] | None = None) -> int:
             else None
         ),
     )
-    # [warehouse] commit_mode = rename|pointer (core/commit.py): rename
-    # is the POSIX/HDFS staged-rename default; pointer is the
-    # object-store-safe manifest swap (old-or-new at every instant).
-    # Since r13 the root may be a URI (hdfs://, s3a://, file://) —
-    # pointer mode only; all warehouse I/O then routes through the
-    # session's Hadoop FileSystem (the same connector stack the
-    # DataFrame reader uses)
-    wh = Warehouse(
-        wh_root,
-        commit_mode=cfg.get("warehouse", "commit_mode", fallback="rename"),
-    )
+    # the root may be a URI (hdfs://, s3a://, file://): all warehouse
+    # I/O then routes through the session's Hadoop FileSystem (the same
+    # connector stack the DataFrame reader uses)
+    wh = Warehouse(wh_root)
 
     def _omop_reader():
         # --at-txn freezes the quality verbs (-dq/-dqd/-ach) on one
@@ -2018,7 +2018,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.list_txns:
         txns = wh.list_txns()
         if not txns:
-            print(f"no transactions in {wh_root} (pointer-mode runs seal one each)")
+            print(f"no transactions in {wh_root} (every ETL run seals one)")
             return 0
         live = txns[-1]
         for t in txns:

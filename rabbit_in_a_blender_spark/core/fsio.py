@@ -113,7 +113,7 @@ def _discovered_partition_keys(data_dir: str, files: list[str]) -> list[str]:
 
 
 def recover_parquet_dir(path: str) -> bool:
-    """Crash recovery for the rename-mode swap: if ``path`` is absent
+    """Crash recovery for the plain-dir staged swap: if ``path`` is absent
     but its ``.__old__`` sibling survives (a crash hit the window
     between the two renames), restore it.  Returns True if a restore
     happened.  ``compact_parquet_dir`` calls this automatically."""
@@ -131,7 +131,6 @@ def compact_parquet_dir(
     path: str,
     target_file_mb: int = 128,
     partition_by: list[str] | None = None,
-    commit_mode: str = "rename",
 ) -> tuple[int, int]:
     """Rewrite an append-decayed parquet directory into ~``target_file_mb``
     files; returns (files_before, files_after).
@@ -141,7 +140,7 @@ def compact_parquet_dir(
     whose per-file open/footer cost dominates scans long before data
     size does (the classic small-files problem).  Compaction reads the
     dir once, repartitions to ceil(total_bytes / target_file_mb), and
-    replaces the directory contents atomically per ``commit_mode``.
+    replaces the directory contents atomically.
 
     Partition layout (ADVICE r11): the DISCOVERED ``key=value`` layout
     is preserved by default (``partition_by=None``), so a nested
@@ -160,17 +159,16 @@ def compact_parquet_dir(
       if a concurrent writer appended or removed files mid-compaction
       the swap ABORTS (staging deleted, RuntimeError) instead of
       silently deleting the new files;
-    - ``commit_mode="rename"`` (default): staged sibling + two renames;
+    - a pointer table (``core/commit.py``, every ``Warehouse`` table):
+      the compacted data lands in a fresh version dir and one pointer
+      file flips — old-or-new at EVERY instant, object-store safe, no
+      absent-path window;
+    - a plain directory (a streaming sink's output, read raw with
+      ``spark.read.parquet(path)``): staged sibling + two renames;
       atomic old-or-new for readers EXCEPT a brief window where the
       path is absent; a crash in that window is auto-recovered on the
-      next call (:func:`recover_parquet_dir`).  Local/HDFS only.
-    - ``commit_mode="pointer"``: for pointer tables
-      (``core/commit.py``) — the compacted data lands in a fresh
-      version dir and one pointer file flips: old-or-new at EVERY
-      instant, object-store safe, no absent-path window.  A plain
-      directory is refused (raw ``spark.read.parquet(path)`` readers
-      would break mid-conversion); write it via
-      ``Warehouse(commit_mode="pointer")`` first.
+      next call (:func:`recover_parquet_dir`).  Local/HDFS only: a
+      plain directory at a URI raises.
 
     Data-neutral by construction: same rows, same schema (equality
     pytest-pinned).
@@ -187,26 +185,15 @@ def compact_parquet_dir(
         resolve_pointer,
     )
 
-    if commit_mode not in ("rename", "pointer"):
-        raise ValueError(
-            f"commit_mode must be 'rename' or 'pointer', got {commit_mode!r}"
-        )
     uri = is_uri(path)
-    if uri and commit_mode != "pointer":
-        raise ValueError(
-            f"{path} is a URI: only commit_mode='pointer' compacts "
-            "object-store paths (directory renames are not atomic "
-            "there)"
-        )
     if not uri:
         recover_parquet_dir(path)
     pointer = is_pointer_table(path)
-    if commit_mode == "pointer" and not pointer:
+    if uri and not pointer:
         raise ValueError(
-            f"{path} is not a pointer table; refusing to convert in "
-            "place (readers using spark.read.parquet on the raw path "
-            "would break). Write it with "
-            "Warehouse(commit_mode='pointer') first."
+            f"{path} is a plain directory at a URI: only pointer tables "
+            "compact on object-store paths (directory renames are not "
+            "atomic there)"
         )
     data_dir = resolve_pointer(path) if pointer else path
     _isdir = fs_for(path).isdir if uri else os.path.isdir

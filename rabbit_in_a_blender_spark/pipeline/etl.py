@@ -283,8 +283,9 @@ class EtlPipeline:
         if not self.inline_checks:
             return
         # Read AND consume omop.concept under the shared lock: sibling
-        # FK-level threads replace that table via rename+rmtree, and an
-        # unlocked reader can list files that vanish mid-job.
+        # FK-level threads commit new versions of that table, and each
+        # commit prunes versions beyond retention — an unlocked reader
+        # can resolve a version dir whose files vanish mid-job.
         with self._shared_lock:
             if not self.wh.exists("omop", "concept"):
                 return
@@ -964,22 +965,21 @@ class EtlPipeline:
                 self.run_stage2(self.registry[table])
         with self._step("invalidate_stale_mappings"):
             self.invalidate_stale_mappings(etl_start)
-        if self.wh.commit_mode == "pointer":
-            # seal the run: ONE manifest publish records every omop
-            # table's just-written version (pipeline/txn.py), so
-            # snapshot readers flip from all-of-last-run to
-            # all-of-this-run atomically — a crash anywhere above
-            # leaves them on the previous run's consistent view
-            with self._step("seal_transaction"):
-                from ..core.commit import is_pointer_table
+        # seal the run: ONE manifest publish records every omop table's
+        # just-written version (pipeline/txn.py), so snapshot readers
+        # flip from all-of-last-run to all-of-this-run atomically — a
+        # crash anywhere above leaves them on the previous run's
+        # consistent view
+        with self._step("seal_transaction"):
+            from ..core.commit import is_pointer_table
 
-                txn = self.wh.begin()
-                for t in self.wh.list_tables("omop"):
-                    # rename-mode leftovers from a mixed-mode history
-                    # have no version dirs to pin — skip them
-                    if is_pointer_table(self.wh.path("omop", t)):
-                        txn.include("omop", t)
-                txn.commit()
+            txn = self.wh.begin()
+            for t in self.wh.list_tables("omop"):
+                # bucketed (catalog-managed) tables and legacy plain
+                # dirs have no version dirs to pin — skip them
+                if is_pointer_table(self.wh.path("omop", t)):
+                    txn.include("omop", t)
+            txn.commit()
         # Attach rows/bytes from the status store to this run's steps
         # (jobs from prefetch pool threads carry no group; their I/O is
         # not attributed to a step — by design, they overlap steps).
@@ -1127,19 +1127,14 @@ def _cleanup_tables(
     # would leave the live manifest naming deleted version dirs —
     # snapshot readers of the cleaned tables would dangle.  Seal the
     # drops as one transaction so the manifest flips consistently.
-    if warehouse.commit_mode == "pointer":
-        gone = {
-            key.split(".", 1)[1]
-            for key in dropped
-            if key.startswith("omop.")
-        }
-        if gone:
-            manifest = warehouse.snapshot() if warehouse.list_txns() else {}
-            named = {k.split("/", 1)[1] for k in manifest}
-            if gone & named:
-                txn = warehouse.begin()
-                for t in gone & named:
-                    txn.drop("omop", t)
-                txn.commit()
-                dropped.append("_TXN[manifest drop sealed]")
+    gone = {k.split(".", 1)[1] for k in dropped if k.startswith("omop.")}
+    if gone:
+        manifest = warehouse.snapshot() if warehouse.list_txns() else {}
+        named = {k.split("/", 1)[1] for k in manifest}
+        if gone & named:
+            txn = warehouse.begin()
+            for t in gone & named:
+                txn.drop("omop", t)
+            txn.commit()
+            dropped.append("_TXN[manifest drop sealed]")
     return dropped

@@ -1,4 +1,4 @@
-"""Atomic multi-table transactions over a pointer-mode warehouse.
+"""Atomic multi-table transactions over the pointer-table warehouse.
 
 The per-table pointer protocol (``core/commit.py``) makes each table
 old-or-new at every instant — but an ETL run writes a DOZEN tables
@@ -172,12 +172,6 @@ class WarehouseTransaction:
     """
 
     def __init__(self, wh, keep: int | None = None):
-        if wh.commit_mode != "pointer":
-            raise ValueError(
-                "transactions need commit_mode='pointer' (the manifest "
-                "pins immutable version dirs; rename-mode tables have "
-                "none)"
-            )
         self._wh = wh
         self._keep = keep
         self._base_txn, self._base = live_manifest(wh)
@@ -232,7 +226,7 @@ class WarehouseTransaction:
         if v is None:
             raise ValueError(
                 f"{zone}.{table} is not a pointer table (no version to "
-                "record); write it through pointer mode first"
+                "record); write it through the Warehouse first"
             )
         key = self._key(zone, table)
         self._pending[key] = v

@@ -3,9 +3,9 @@ achilles namespaces — reference README.md:22, cli.py:62-65).
 
 Local tests use parquet dirs under one root; on a cluster the same layout
 maps to catalog databases or object-store prefixes.  Writes are atomic
-rebuilds (A7 semantics); pick the protocol with ``commit_mode`` —
-``rename`` (staged dir + rename, POSIX/HDFS) or ``pointer``
-(manifest/pointer swap, object-store safe; see ``core/commit.py``).
+rebuilds (A7 semantics) through one protocol, the pointer commit of
+``core/commit.py``: immutable version dirs plus one atomically
+replaced ``_POINTER`` file — object-store safe.
 """
 
 from __future__ import annotations
@@ -69,54 +69,35 @@ def cluster_layout(
 
 
 class Warehouse:
-    """``commit_mode`` picks the atomic-replace protocol (VERDICT r11
-    task 2):
+    """Every table is a pointer table (``core/commit.py``): data lands
+    in immutable ``v-NNNNNN`` dirs and ONE small ``_POINTER`` file
+    flips atomically — old-or-new at every instant on any store with
+    atomic single-object replace (POSIX rename, HDFS rename, S3 PUT),
+    no directory-rename assumption.  Readers resolve through this class
+    (``read``/``exists`` do).  A table retains its live version plus
+    older ones up to its retention (``core.commit.DEFAULT_KEEP`` unless
+    ``write_versioned`` persisted another), so snapshots and time
+    travel are version dirs and ``restore_version`` is a pointer flip.
 
-    - ``"rename"`` (default): staged sibling dir + directory rename —
-      atomic on POSIX/HDFS, the A7 semantics every prior round shipped;
-      NOT atomic on S3-class object stores, and the swap has a brief
-      window where the table path is absent (crash there is recoverable
-      from ``.__old__``).
-    - ``"pointer"``: manifest/pointer-swap tables (``core/commit.py``):
-      data lands in immutable ``v-NNNNNN`` dirs and ONE small
-      ``_POINTER`` file flips atomically — old-or-new at every instant
-      on any store with atomic single-object replace, no
-      directory-rename assumption.  Readers must resolve through this
-      class (``read``/``exists`` do); snapshots and time travel come
-      free (version dirs), so ``write_versioned``/``restore_version``
-      become pointer flips.
+    One writer at a time per table, ENFORCED: a second concurrent
+    commit raises ``ConcurrentCommitError`` instead of silently
+    clobbering (VERDICT r12 task 2).  A URI root (``hdfs://``,
+    ``s3a://``, ``file://``) routes all I/O through the session's
+    Hadoop FileSystem.
 
-    Both modes are one-writer-at-a-time per table; pointer mode
-    ENFORCES it (a second concurrent commit raises
-    ``ConcurrentCommitError`` instead of silently clobbering — VERDICT
-    r12 task 2), and since r13 its I/O routes through the session's
-    Hadoop FileSystem for URI paths, so it runs on hdfs://s3a://-class
-    stores, not just locally mounted ones.
+    Legacy plain table dirs (loose parquet files, no ``_POINTER``) stay
+    readable and convert on their first write.
     """
 
-    def __init__(self, root: str, commit_mode: str = "rename"):
-        if commit_mode not in ("rename", "pointer"):
-            raise ValueError(
-                f"commit_mode must be 'rename' or 'pointer', got "
-                f"{commit_mode!r}"
-            )
+    def __init__(self, root: str):
         from ..core.commit import is_uri
 
-        self.root = root.rstrip("/") if is_uri(root) else root
         self._uri = is_uri(root)
-        if self._uri and commit_mode != "pointer":
-            raise ValueError(
-                f"warehouse root {root!r} is a URI: directory renames "
-                "are not atomic on object stores, so only "
-                "commit_mode='pointer' is supported there (rename mode "
-                "needs a locally mounted / HDFS-style root accessed by "
-                "plain path)"
-            )
-        self.commit_mode = commit_mode
+        self.root = root.rstrip("/") if self._uri else root
         # Schema memo for IMMUTABLE pointer version dirs, keyed by the
         # resolved dir path: a read with a known schema plans with no
         # footer-inference job.  Filled by this instance's commits and
-        # first reads; rename-mode paths are mutable and always infer.
+        # first reads.
         self._schemas: dict[str, T.StructType] = {}
         if not self._uri:
             os.makedirs(root, exist_ok=True)
@@ -140,10 +121,8 @@ class Warehouse:
 
     def _data_path(self, zone: str, table: str) -> str:
         """Where the live parquet files actually are: through the
-        pointer for pointer tables, the table path otherwise.  Reading
-        resolves by what's ON DISK (not the session's commit_mode), so
-        a pointer-mode warehouse can read rename-mode tables and vice
-        versa."""
+        pointer for pointer tables, the table path for a legacy plain
+        dir."""
         from ..core.commit import is_pointer_table, resolve_pointer
 
         p = self.path(zone, table)
@@ -170,6 +149,18 @@ class Warehouse:
         p = self.path(zone, table)
         if is_pointer_table(p):
             return self.read_version_dir(spark, resolve_pointer(p))
+        parts = [
+            p.rstrip("/") + "/" + d
+            for d in self._fs().listdirs(p)
+            if "=" in d and not d.startswith((".", "_"))
+        ]
+        live = [resolve_pointer(d) if is_pointer_table(d) else d for d in parts]
+        if live != parts:
+            # a partitioned table whose key=value partitions are pointer
+            # tables (the ETL's id map): read each partition's LIVE dir
+            # only — the retained versions beside it would count twice
+            # — and rediscover the keys from above the version dirs
+            return spark.read.option("basePath", p).parquet(*live)
         return spark.read.parquet(p)
 
     def read_version_dir(self, spark: SparkSession, d: str) -> DataFrame:
@@ -182,15 +173,32 @@ class Warehouse:
         self._schemas[d] = df.schema
         return df
 
-    def _commit(self, df: DataFrame, target: str, keep: int | None = None) -> None:
-        """``pointer_commit`` of ``df`` into ``target``; the new version
-        dir's schema is memoized as a read will report it."""
-        from ..core.commit import _vdir, pointer_commit
+    def _commit(
+        self, df: DataFrame, target: str, keep: int | None = None
+    ) -> int | None:
+        """``pointer_commit`` of ``df`` into ``target``; returns the
+        version live before it (None for a new or legacy plain table).
+        The new version dir's schema is memoized as a read will report
+        it.  A legacy plain dir CONVERTS: the new version lands first
+        (the plan may lazily read the old loose files), then they are
+        removed."""
+        from ..core.commit import _vdir, current_version, pointer_commit
 
+        prev = current_version(target)
         v = pointer_commit(
             lambda d: df.write.mode("overwrite").parquet(d), target, keep=keep
         )
         self._schemas[_vdir(target, v)] = _as_read(df.schema)
+        if prev is None:
+            fs = self._fs()
+            for f in fs.listdir(target):
+                fp = target.rstrip("/") + "/" + f
+                if (
+                    f.endswith(".parquet")
+                    or f.startswith(("_SUCCESS", "part-", "."))
+                ) and fs.isfile(fp):
+                    fs.delete(fp)
+        return prev
 
     def write(
         self,
@@ -200,95 +208,59 @@ class Warehouse:
         cluster_by: list[str] | None = None,
         zorder_by: list[str] | None = None,
     ) -> None:
-        """Atomic rebuild (CREATE OR REPLACE TABLE ... AS semantics).
-
-        Staged write + rename: the plan may lazily READ the table being
-        replaced (e.g. swap-table extension on re-runs) — a plain
-        overwrite would delete the input files mid-job.  Rename is atomic
-        on posix/HDFS; on object stores use ``commit_mode="pointer"``
-        (the manifest/pointer swap needs only atomic single-object
-        replace).
+        """Atomic rebuild (CREATE OR REPLACE TABLE ... AS semantics) by
+        pointer commit: the new version lands in its own dir before the
+        pointer flips, so the plan may lazily READ the table being
+        replaced (e.g. swap-table extension on re-runs).
 
         ``cluster_by`` / ``zorder_by``: see :func:`cluster_layout`.
         """
-        df = cluster_layout(df, cluster_by, zorder_by)
-        target = self.path(zone, table)
-        from ..core.commit import is_pointer_table
-
-        if self.commit_mode == "pointer" or is_pointer_table(target):
-            # on-disk format wins over session mode: a rename-mode
-            # session replacing a pointer table must not rename over
-            # the version dirs, and a pointer-mode write CONVERTS a
-            # plain dir (the new version lands first — the plan may
-            # lazily read the old loose files — then they're removed)
-            was_plain = not is_pointer_table(target)
-            self._commit(df, target)
-            if was_plain:
-                fs = self._fs()
-                for f in fs.listdir(target):
-                    fp = target.rstrip("/") + "/" + f
-                    if fs.isfile(fp) and (
-                        f.endswith(".parquet")
-                        or f.startswith(("_SUCCESS", "part-", "."))
-                    ):
-                        if f == "_POINTER":
-                            continue
-                        fs.delete(fp)
-            return
-        staging = target + ".__staging__"
-        shutil.rmtree(staging, ignore_errors=True)
-        df.write.mode("overwrite").parquet(staging)
-        old = target + ".__old__"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(target):
-            os.rename(target, old)
-        os.rename(staging, target)
-        shutil.rmtree(old, ignore_errors=True)
+        self._commit(
+            cluster_layout(df, cluster_by, zorder_by), self.path(zone, table)
+        )
 
     def append(self, df: DataFrame, zone: str, table: str) -> None:
-        """Plain file append.  In pointer mode this appends INTO the
-        live version dir (readers see the new files appear, exactly as
-        non-atomically as a rename-mode append) — the pointer's
-        old-or-new guarantee covers REPLACES, not appends; batch
-        appenders that need exactly-once use their own batch=<id>
-        subdir discipline (streaming/sink.py)."""
+        """Plain file append INTO the live version dir: readers see the
+        new files appear, non-atomically — the pointer's old-or-new
+        guarantee covers REPLACES, not appends; batch appenders that
+        need exactly-once use their own batch=<id> subdir discipline
+        (streaming/sink.py).  The first append to a new table commits
+        it; to a legacy plain dir, converts it (old rows plus new)."""
         from ..core.commit import is_pointer_table
 
         target = self.path(zone, table)
-        if self.commit_mode == "pointer" or is_pointer_table(target):
-            if not is_pointer_table(target):
-                self._commit(df, target)
-                return
-            d = self._data_path(zone, table)
-            # the live dir changes under its name: forget its schema
-            self._schemas.pop(d, None)
-            df.write.mode("append").parquet(d)
+        if not is_pointer_table(target):
+            if self.exists(zone, table):
+                df = self.read(df.sparkSession, zone, table).unionByName(
+                    df, allowMissingColumns=True
+                )
+            self._commit(df, target)
             return
-        df.write.mode("append").parquet(target)
+        d = self._data_path(zone, table)
+        # the live dir changes under its name: forget its schema
+        self._schemas.pop(d, None)
+        df.write.mode("append").parquet(d)
 
-    # ---- snapshot versioning (poor-man's time travel) -----------------
+    # ---- versions (time travel) ----------------------------------------
     #
-    # A bounded history of table snapshots so a bad ETL run is a rename
-    # away from recovery.  The live table stays at its normal path (every
-    # reader unchanged); snapshots live under <zone>/.snapshots/<table>/
-    # v<NNN>.  Snapshotting the outgoing version is a RENAME of files the
-    # atomic-rebuild path was about to delete — zero extra I/O at any
-    # table size.  (On object stores, pointer mode supersedes this
-    # whole section: version dirs ARE the snapshots, retention persists
-    # in the pointer file, and concurrent writers are locked out.)
-
-    def _snap_dir(self, zone: str, table: str) -> str:
-        assert zone in ZONES, zone
-        return self._join(zone, ".snapshots", table)
+    # The version dirs a table retains ARE its snapshots: reading one is
+    # time travel, restoring one is a pointer flip.
 
     def versions(self, zone: str, table: str) -> list[int]:
-        """Snapshot version numbers, oldest first."""
-        d = self._snap_dir(zone, table)
-        out = []
-        for name in self._fs().listdir(d):
-            if name.startswith("v") and name[1:].isdigit():
-                out.append(int(name[1:]))
-        return sorted(out)
+        """Snapshot version numbers, oldest first: every retained
+        published version (up to the pointer's high-water mark) except
+        a live version AT the mark — after a ``restore_version`` the
+        live version is an older snapshot and stays listed."""
+        from ..core.commit import _read_pointer, list_versions
+
+        target = self.path(zone, table)
+        live, _, hw = _read_pointer(self._fs(), target)
+        if live is None:
+            return []
+        return [
+            v for v in list_versions(target)
+            if v <= hw and not (v == live == hw)
+        ]
 
     def write_versioned(
         self,
@@ -298,102 +270,54 @@ class Warehouse:
         keep: int = 3,
         cluster_by: list[str] | None = None,
     ) -> int | None:
-        """Atomic replace that snapshots the outgoing version.
+        """Atomic replace that keeps the outgoing version as a snapshot.
 
-        Returns the snapshot version the previous contents were saved
-        under (None on the first write).  At most ``keep`` snapshots are
-        retained; older ones are pruned.
+        Returns the version that was live before (None on the first
+        write).  At most ``keep`` snapshots are retained besides the
+        live version (``keep <= 0``: live only).  The retention is
+        PERSISTED in the pointer file, so later plain ``write``/
+        ``compact`` calls inherit it instead of pruning to the default
+        (ADVICE r12 item 1).
         """
-        df = cluster_layout(df, cluster_by)
-        target = self.path(zone, table)
-        from ..core.commit import current_version, is_pointer_table
-
-        if self.commit_mode == "pointer" or is_pointer_table(target):
-            # pointer tables get versioning for free: the outgoing
-            # version dir IS the snapshot; retain live + keep snapshots
-            # (keep <= 0 means NO snapshots — live only — matching the
-            # rename path's prune-everything semantics).  The explicit
-            # retention is PERSISTED in the pointer file, so later
-            # plain write()/compact() calls (keep=None) inherit it
-            # instead of pruning to the default 3 (ADVICE r12 item 1).
-            prev = current_version(target)
-            self._commit(df, target, keep=keep + 1 if keep > 0 else 1)
-            return prev
-        staging = target + ".__staging__"
-        shutil.rmtree(staging, ignore_errors=True)
-        df.write.mode("overwrite").parquet(staging)
-        saved = None
-        if os.path.isdir(target):
-            versions = self.versions(zone, table)
-            saved = (versions[-1] + 1) if versions else 1
-            snap = os.path.join(self._snap_dir(zone, table), f"v{saved}")
-            os.makedirs(os.path.dirname(snap), exist_ok=True)
-            os.rename(target, snap)
-        os.rename(staging, target)
-        versions = self.versions(zone, table)
-        prune = versions if keep <= 0 else versions[:-keep]
-        for v in prune:
-            shutil.rmtree(
-                os.path.join(self._snap_dir(zone, table), f"v{v}"),
-                ignore_errors=True,
-            )
-        return saved
+        return self._commit(
+            cluster_layout(df, cluster_by),
+            self.path(zone, table),
+            keep=keep + 1 if keep > 0 else 1,
+        )
 
     def read_version(
         self, spark: SparkSession, zone: str, table: str, version: int
     ) -> DataFrame:
-        from ..core.commit import (
-            _vdir,
-            high_water,
-            is_pointer_table,
-            list_versions,
-        )
+        from ..core.commit import _vdir, high_water, list_versions
 
         target = self.path(zone, table)
-        if is_pointer_table(target):
-            d = _vdir(target, version)
-            # versions up to the high-water mark are published history
-            # (after a restore_version the live pointer sits BELOW
-            # later versions); above it are crash orphans — unreadable
-            hw = high_water(target)
-            if not self._fs().isdir(d) or (hw is not None and version > hw):
-                avail = [v for v in list_versions(target) if v <= (hw or 0)]
-                raise ValueError(
-                    f"{zone}.{table} has no version {version}; "
-                    f"available: {avail}"
-                )
-            return self.read_version_dir(spark, d)
-        snap = os.path.join(self._snap_dir(zone, table), f"v{version}")
-        if not self._fs().isdir(snap):
+        d = _vdir(target, version)
+        # versions up to the high-water mark are published history
+        # (after a restore_version the live pointer sits BELOW later
+        # versions); above it are crash orphans — unreadable
+        hw = high_water(target)
+        if hw is None or version > hw or not self._fs().isdir(d):
+            avail = [v for v in list_versions(target) if v <= (hw or 0)]
             raise ValueError(
-                f"{zone}.{table} has no snapshot v{version}; "
-                f"available: {self.versions(zone, table)}"
+                f"{zone}.{table} has no version {version}; "
+                f"available: {avail}"
             )
-        return spark.read.parquet(snap)
+        return self.read_version_dir(spark, d)
 
     def restore_version(
         self, spark: SparkSession, zone: str, table: str, version: int
     ) -> int | None:
-        """Make snapshot ``version`` the live table again.
+        """Make snapshot ``version`` the live table again; returns the
+        version that was live before.
 
-        The current contents are snapshotted first (so a restore is
-        itself undoable); the restored snapshot stays in history.
-        Returns the snapshot version the replaced contents were saved
-        under.  On a pointer table the restore is a ZERO-I/O pointer
-        flip (``core/commit.py::repoint``): the pointer's high-water
-        mark keeps the versions above the restored one recognized as
-        history, so the undo is another flip — no table rewrite at any
-        size (the r12 docstring's 'one rewrite today' limitation is
-        gone).
+        A ZERO-I/O pointer flip (``core/commit.py::repoint``): the
+        pointer's high-water mark keeps the versions above the restored
+        one recognized as history, so the undo is another flip — no
+        table rewrite at any size.
         """
-        from ..core.commit import is_pointer_table, repoint
+        from ..core.commit import repoint
 
-        target = self.path(zone, table)
-        if is_pointer_table(target):
-            return repoint(target, version)
-        return self.write_versioned(
-            self.read_version(spark, zone, table, version), zone, table
-        )
+        return repoint(self.path(zone, table), version)
 
     def compact(
         self,
@@ -408,9 +332,10 @@ class Warehouse:
         Append-heavy tables (incremental loads, streaming sinks) decay
         into thousands of small files, and at scale every scan then pays
         per-file open/footer costs while losing rowgroup-stat pruning.
-        Compaction reads the table, coalesces to ceil(bytes / target)
-        partitions, and swaps atomically via the staged-rename ``write``
-        path (readers of the old files are unaffected mid-rewrite).
+        Compaction reads the live version, coalesces to
+        ceil(bytes / target) partitions, and commits the result as a new
+        version through ``write`` (readers of the old version are
+        unaffected mid-rewrite; it stays retained as a snapshot).
 
         ``coalesce`` (not ``repartition``): merging files needs no
         shuffle — each output task reads a few input files sequentially.
@@ -597,7 +522,7 @@ class Warehouse:
     #
     # One atomic manifest publish covers every table an ETL run writes:
     # snapshot readers see all-old or all-new, never a torn cross-table
-    # view.  Pointer mode only (the manifest pins version dirs).
+    # view.  The manifest pins each table's version dirs.
 
     def begin(self, keep: int | None = None):
         """Start a multi-table transaction (explicit commit/rollback);
@@ -730,7 +655,7 @@ class Warehouse:
         return sorted(
             d
             for d in self._fs().listdirs(self._join(zone))
-            # hidden dirs are warehouse internals (.snapshots), not tables
+            # hidden dirs (a legacy warehouse's .snapshots) are not tables
             if not d.startswith(".")
         )
 

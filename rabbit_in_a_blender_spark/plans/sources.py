@@ -601,6 +601,8 @@ def wh_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     GONE after compaction while the contents are untouched.  A compact
     that drops/duplicates rows or fails to merge files hash-mismatches.
     """
+    from ..core.commit import resolve_pointer
+
     nation = load_tables(spark, sf_dir, "nation")["nation"]
     wh = Warehouse(tempfile.mkdtemp(prefix="riab_compact_"))
     for rk in range(5):
@@ -610,7 +612,7 @@ def wh_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def files():
-        p = wh.path("omop", "nation_frag")
+        p = resolve_pointer(wh.path("omop", "nation_frag"))
         return sum(1 for f in os.listdir(p) if f.endswith(".parquet"))
 
     def stats():
@@ -674,9 +676,7 @@ def wh_pointer_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..core.commit import pointer_commit
 
     nation = load_tables(spark, sf_dir, "nation")["nation"]
-    wh = Warehouse(
-        tempfile.mkdtemp(prefix="riab_pointer_"), commit_mode="pointer"
-    )
+    wh = Warehouse(tempfile.mkdtemp(prefix="riab_pointer_"))
 
     def n():
         return wh.read(spark, "omop", "t").count()
@@ -967,9 +967,7 @@ def wh_pointer_hadoopfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def wh_txn_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_tables(spark, sf_dir, "nation")["nation"]
-    wh = Warehouse(
-        tempfile.mkdtemp(prefix="riab_txn_"), commit_mode="pointer"
-    )
+    wh = Warehouse(tempfile.mkdtemp(prefix="riab_txn_"))
 
     def snap(zone="omop"):
         return (
@@ -1055,9 +1053,7 @@ def wh_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline.evolve import evolve, read_evolved
 
     nation = load_tables(spark, sf_dir, "nation")["nation"]
-    wh = Warehouse(
-        tempfile.mkdtemp(prefix="riab_evolve_"), commit_mode="pointer"
-    )
+    wh = Warehouse(tempfile.mkdtemp(prefix="riab_evolve_"))
     old = nation.select(
         F.col("n_nationkey").cast("int").alias("key"),
         F.col("n_name").alias("name"),
@@ -1200,9 +1196,7 @@ def wh_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline.stats import analyze_table, table_stats
 
     nation = load_tables(spark, sf_dir, "nation")["nation"]
-    wh = Warehouse(
-        tempfile.mkdtemp(prefix="riab_stats_"), commit_mode="pointer"
-    )
+    wh = Warehouse(tempfile.mkdtemp(prefix="riab_stats_"))
     wh.write(nation, "omop", "nation")
     analyze_table(
         wh, spark, "omop", "nation",

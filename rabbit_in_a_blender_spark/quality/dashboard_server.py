@@ -42,6 +42,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 from urllib.parse import parse_qs, urlparse
 
+from ..core.commit import is_pointer_table, resolve_pointer
 from .dashboard import FAMILY_KAHN
 
 CATEGORIES = ("Plausibility", "Conformance", "Completeness")
@@ -49,12 +50,16 @@ CONTEXTS = ("Verification", "Validation")
 
 
 def _load_rows(root: str, table: str) -> list[dict[str, Any]]:
-    """Read a warehouse dqd table (a parquet dir) without Spark."""
+    """Read a warehouse dqd table without Spark: the live version of a
+    pointer table (the retained versions beside it are history), or a
+    legacy plain parquet dir."""
     import pyarrow.parquet as pq
 
     path = os.path.join(root, "dqd", table)
     if not os.path.isdir(path):
         return []
+    if is_pointer_table(path):
+        path = resolve_pointer(path)
     return pq.read_table(path).to_pylist()
 
 

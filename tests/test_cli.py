@@ -20,6 +20,14 @@ def tmpdir_():
     shutil.rmtree(d, ignore_errors=True)
 
 
+def _wh_read(spark, root, zone, table):
+    """A table of the CLI's warehouse under ``root``, read as the
+    Warehouse resolves it (the live version of a pointer table)."""
+    from rabbit_in_a_blender_spark.pipeline.warehouse import Warehouse
+
+    return Warehouse(os.path.join(root, "warehouse")).read(spark, zone, table)
+
+
 @pytest.fixture()
 def env(spark, tmpdir_):
     """Config ini + raw zone + etl folders under one tmp root."""
@@ -61,6 +69,22 @@ def test_print_etl_flow(capsys):
     assert "level 0" in out and "person" in out
 
 
+def test_ini_commit_mode_other_than_pointer_exits(tmpdir_):
+    """Every warehouse write is a pointer commit: an ini asking for
+    another commit_mode exits with the migration hint; the
+    ``commit_mode = pointer`` line stays accepted."""
+    ini = os.path.join(tmpdir_, "riab.ini")
+    with open(ini, "w") as f:
+        f.write(f"[warehouse]\nroot = {tmpdir_}/wh\ncommit_mode = rename\n")
+    with pytest.raises(
+        SystemExit, match="rename mode is gone.*convert on their first write"
+    ):
+        main(["--config", ini, "--print-etl-flow"])
+    with open(ini, "w") as f:
+        f.write(f"[warehouse]\nroot = {tmpdir_}/wh\ncommit_mode = pointer\n")
+    assert main(["--config", ini, "--print-etl-flow"]) == 0
+
+
 def test_create_folders(env, capsys):
     target = os.path.join(env["root"], "scaffold")
     assert main(["--config", env["ini"], "--create-folders", target]) == 0
@@ -78,9 +102,7 @@ def test_run_etl_then_quality_then_achilles_then_cleanup(env, spark, capsys):
     assert main(["--config", ini, "--run-etl", env["etl_dir"]]) == 0
     out = capsys.readouterr().out
     assert "person" in out
-    person = spark.read.parquet(
-        os.path.join(env["root"], "warehouse", "omop", "person")
-    )
+    person = _wh_read(spark, env["root"], "omop", "person")
     rows = {r["year_of_birth"]: r for r in person.collect()}
     assert len(rows) == 3  # DISTINCT dropped the duplicate upload row
     assert rows[1970]["gender_concept_id"] == 8507  # usagi-mapped
@@ -93,9 +115,7 @@ def test_run_etl_then_quality_then_achilles_then_cleanup(env, spark, capsys):
         ["--config", ini, "--run-etl", env["etl_dir"],
          "--process-semi-approved-mappings"]
     ) == 0
-    person = spark.read.parquet(
-        os.path.join(env["root"], "warehouse", "omop", "person")
-    )
+    person = _wh_read(spark, env["root"], "omop", "person")
     semi = {r["year_of_birth"]: r["gender_concept_id"] for r in person.collect()}
     assert semi[1990] == 8551
 
@@ -128,9 +148,7 @@ def test_run_etl_then_quality_then_achilles_then_cleanup(env, spark, capsys):
 
     # --achilles persists both result shapes for the present tables
     assert main(["--config", ini, "--achilles"]) == 0
-    res = spark.read.parquet(
-        os.path.join(env["root"], "warehouse", "achilles", "achilles_results")
-    )
+    res = _wh_read(spark, env["root"], "achilles", "achilles_results")
     ids = {r["analysis_id"] for r in res.select("analysis_id").distinct().collect()}
     assert {1, 2, 3} <= ids  # person count / by gender / by year of birth
 
@@ -167,9 +185,7 @@ def test_import_vocabularies(env, spark):
         f.write("Gender\tGender\t2\n")
         f.write("Condition\tCondition\t19\n")
     assert main(["--config", env["ini"], "--import-vocabularies", vocab_dir]) == 0
-    dom = spark.read.parquet(
-        os.path.join(env["root"], "warehouse", "omop", "domain")
-    )
+    dom = _wh_read(spark, env["root"], "omop", "domain")
     rows = {r["domain_id"]: r["domain_concept_id"] for r in dom.collect()}
     assert rows == {"Gender": 2, "Condition": 19}
 
@@ -178,7 +194,7 @@ def test_create_db(env, spark):
     assert main(["--config", env["ini"], "--create-db"]) == 0
     vocab = os.path.join(env["root"], "warehouse", "omop", "vocabulary")
     assert os.path.isdir(vocab)
-    df = spark.read.parquet(vocab)
+    df = _wh_read(spark, env["root"], "omop", "vocabulary")
     assert "vocabulary_id" in df.columns and df.count() == 0
 
 
@@ -202,9 +218,7 @@ def test_run_etl_skip_usagi_upload_reuses_work_tables(env, spark, capsys):
         ["--config", ini, "--run-etl", env["etl_dir"],
          "--skip-usagi-and-custom-concept-upload", "--skip-event-fks-step"]
     ) == 0
-    person = spark.read.parquet(
-        os.path.join(env["root"], "warehouse", "omop", "person")
-    )
+    person = _wh_read(spark, env["root"], "omop", "person")
     rows = {r["year_of_birth"]: r["gender_concept_id"] for r in person.collect()}
     assert rows[1970] == 8507  # mapped from the persisted usagi work table
 
@@ -1081,7 +1095,7 @@ def test_cli_txn_verbs_on_pointer_warehouse(env, spark, capsys):
 
     from rabbit_in_a_blender_spark.pipeline.warehouse import Warehouse
 
-    wh = Warehouse(f"{root}/ptr_wh", commit_mode="pointer")
+    wh = Warehouse(f"{root}/ptr_wh")
     n_run = wh.read_snapshot(spark, "omop", "person").count()
 
     # warehouse-wide restore to the first run's view
@@ -1118,9 +1132,7 @@ def test_cli_migrate_db(env, spark, capsys):
     out = capsys.readouterr().out
     assert "person:" in out and "-legacy" in out
     assert "~person_id:int->bigint" in out
-    person = spark.read.parquet(
-        os.path.join(root, "warehouse", "omop", "person")
-    )
+    person = _wh_read(spark, root, "omop", "person")
     assert "legacy" not in person.columns
     assert dict(person.dtypes)["person_id"] == "bigint"
     # idempotent: second run reports zero changes
@@ -1149,7 +1161,7 @@ def test_cli_vacuum(env, spark, capsys):
     assert "vacuumed" in out and "pointer tables" in out
     from rabbit_in_a_blender_spark.pipeline.warehouse import Warehouse
 
-    wh = Warehouse(f"{root}/vac_wh", commit_mode="pointer")
+    wh = Warehouse(f"{root}/vac_wh")
     assert wh.read_snapshot(spark, "omop", "person").count() > 0
 
 

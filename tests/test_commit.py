@@ -60,7 +60,7 @@ def test_pointer_commit_crash_between_stage_and_publish(spark, tmp_path):
 
 
 def test_warehouse_pointer_mode_roundtrip_and_conversion(spark, tmp_path):
-    wh = Warehouse(str(tmp_path / "wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "wh"))
     wh.write(_rows(spark, 0, 50), "work", "t1")
     assert wh.exists("work", "t1")
     assert is_pointer_table(wh.path("work", "t1"))
@@ -72,23 +72,50 @@ def test_warehouse_pointer_mode_roundtrip_and_conversion(spark, tmp_path):
     wh.append(_rows(spark, 100, 103), "work", "t1")
     assert wh.read(spark, "work", "t1").count() == 10
 
-    # a rename-mode table converts on the first pointer-mode write and
-    # stays readable through the same Warehouse API
-    wh_r = Warehouse(str(tmp_path / "wh"), commit_mode="rename")
-    wh_r.write(_rows(spark, 0, 5), "work", "plain")
-    assert not is_pointer_table(wh_r.path("work", "plain"))
+    # a legacy plain table dir is readable, converts on its first
+    # write, and stays readable through the same Warehouse API
+    plain = wh.path("work", "plain")
+    _rows(spark, 0, 5).write.parquet(plain)
+    assert not is_pointer_table(plain)
+    assert wh.read(spark, "work", "plain").count() == 5
     wh.write(_rows(spark, 0, 9), "work", "plain")
-    assert is_pointer_table(wh.path("work", "plain"))
+    assert is_pointer_table(plain)
     assert wh.read(spark, "work", "plain").count() == 9
-    # and a rename-mode session replacing a pointer table routes
-    # through the pointer protocol (on-disk format wins)
-    wh_r.write(_rows(spark, 0, 4), "work", "plain")
-    assert is_pointer_table(wh_r.path("work", "plain"))
-    assert wh_r.read(spark, "work", "plain").count() == 4
+    # the loose files are gone; the next replace is a plain commit
+    assert not [f for f in os.listdir(plain) if f.endswith(".parquet")]
+    wh.write(_rows(spark, 0, 4), "work", "plain")
+    assert is_pointer_table(plain)
+    assert wh.read(spark, "work", "plain").count() == 4
+
+
+def test_append_converts_a_legacy_plain_dir(spark, tmp_path):
+    """The first append to a legacy plain dir commits old rows plus new
+    as the table's first version."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    plain = wh.path("work", "log")
+    _rows(spark, 0, 5).write.parquet(plain)
+    wh.append(_rows(spark, 5, 8), "work", "log")
+    assert is_pointer_table(plain)
+    got = sorted(r["id"] for r in wh.read(spark, "work", "log").collect())
+    assert got == list(range(8))
+
+
+def test_read_partitions_that_are_pointer_tables(spark, tmp_path):
+    """A table whose key=value partitions are each a pointer table (the
+    ETL's id map) reads each partition's LIVE version once — the
+    retained versions beside it are history — with the partition
+    column rediscovered."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.write(_rows(spark, 0, 3), "work", "m/part=a")
+    for n in (5, 4, 2):  # b: written, then rewritten twice
+        wh.write(_rows(spark, 0, n), "work", "m/part=b")
+    assert len(list_versions(wh.path("work", "m/part=b"))) == 3
+    got = sorted((r["part"], r["id"]) for r in wh.read(spark, "work", "m").collect())
+    assert got == [("a", 0), ("a", 1), ("a", 2), ("b", 0), ("b", 1)]
 
 
 def test_warehouse_pointer_versioning_and_restore(spark, tmp_path):
-    wh = Warehouse(str(tmp_path / "whv"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "whv"))
     assert wh.write_versioned(_rows(spark, 0, 3), "work", "t") is None
     assert wh.write_versioned(_rows(spark, 0, 5), "work", "t") == 1
     assert wh.write_versioned(_rows(spark, 0, 8), "work", "t") == 2
@@ -111,23 +138,24 @@ def test_warehouse_pointer_versioning_and_restore(spark, tmp_path):
 def test_compact_pointer_table_and_plain_refusal(spark, tmp_path):
     from rabbit_in_a_blender_spark.core.fsio import compact_parquet_dir
 
-    wh = Warehouse(str(tmp_path / "whc"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "whc"))
     wh.write(_rows(spark, 0, 100).repartition(8), "work", "decayed")
     for i in range(4):
         wh.append(_rows(spark, 100 + i * 10, 110 + i * 10).repartition(4),
                   "work", "decayed")
     t = wh.path("work", "decayed")
     rows_before = sorted(r["id"] for r in wh.read(spark, "work", "decayed").collect())
-    before, after = compact_parquet_dir(spark, t, commit_mode="pointer")
+    before, after = compact_parquet_dir(spark, t)
     assert after < before
     assert is_pointer_table(t)
     rows_after = sorted(r["id"] for r in wh.read(spark, "work", "decayed").collect())
     assert rows_after == rows_before
-    # plain dirs are refused in pointer mode (raw-path readers would break)
+    # a plain dir at a URI raises (directory renames are not atomic on
+    # object stores)
     plain = str(tmp_path / "plain")
     _rows(spark, 0, 10).write.parquet(plain)
-    with pytest.raises(ValueError, match="not a pointer table"):
-        compact_parquet_dir(spark, plain, commit_mode="pointer")
+    with pytest.raises(ValueError, match="plain directory at a URI"):
+        compact_parquet_dir(spark, "file://" + plain)
 
 
 def test_compact_partition_layout_validation(spark, tmp_path):
@@ -232,7 +260,7 @@ def test_compact_pointer_aborts_on_concurrent_writer(spark, tmp_path, monkeypatc
     import rabbit_in_a_blender_spark.core.fsio as fsio
     from rabbit_in_a_blender_spark.core.commit import current_version
 
-    wh = Warehouse(str(tmp_path / "wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "wh"))
     wh.write(_rows(spark, 0, 60).repartition(6), "work", "t")
     t = wh.path("work", "t")
     live_before = current_version(t)
@@ -248,7 +276,7 @@ def test_compact_pointer_aborts_on_concurrent_writer(spark, tmp_path, monkeypatc
 
     monkeypatch.setattr(fsio, "_walk_parquet", racy)
     with pytest.raises(RuntimeError, match="changed during compaction"):
-        fsio.compact_parquet_dir(spark, t, commit_mode="pointer")
+        fsio.compact_parquet_dir(spark, t)
     monkeypatch.setattr(fsio, "_walk_parquet", orig)
     assert current_version(t) == live_before  # pointer never flipped
     assert wh.read(spark, "work", "t").count() == 60
@@ -399,7 +427,7 @@ def test_pointer_retention_persisted_across_plain_writes(spark, tmp_path):
     file and inherited by keep=None commits."""
     from rabbit_in_a_blender_spark.core.commit import table_retention
 
-    wh = Warehouse(str(tmp_path / "whk"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "whk"))
     for i in range(6):
         wh.write_versioned(_rows(spark, 0, i + 1), "work", "t", keep=4)
     t = wh.path("work", "t")
@@ -429,13 +457,9 @@ def test_warehouse_uri_root_pointer_mode_end_to_end(spark, tmp_path):
     """r13: a Warehouse rooted at a URI (file:// here — hdfs://s3a://
     in production) runs the whole table lifecycle through the Hadoop
     FileSystem route: write/read/exists, append, versioned replace +
-    time travel + restore, compact, list_tables, drop.  Rename mode on
-    a URI root is refused up front (directory renames are not
-    object-store-atomic)."""
+    time travel + restore, compact, list_tables, drop."""
     root = "file://" + str(tmp_path / "uri_wh")
-    with pytest.raises(ValueError, match="only commit_mode='pointer'"):
-        Warehouse(root, commit_mode="rename")
-    wh = Warehouse(root, commit_mode="pointer")
+    wh = Warehouse(root)
     assert not wh.exists("work", "t")
     wh.write(_rows(spark, 0, 40).repartition(4), "work", "t")
     assert wh.exists("work", "t")
@@ -470,12 +494,12 @@ def test_warehouse_uri_root_pointer_mode_end_to_end(spark, tmp_path):
 def test_compact_parquet_dir_uri_pointer_table(spark, tmp_path):
     """r13: the streaming-sink compaction path works on URI pointer
     tables through the Hadoop FileSystem walker, preserving a
-    discovered partition layout; rename-mode compaction of a URI is
-    refused (directory renames are not object-store-atomic)."""
+    discovered partition layout; a plain dir at a URI is refused
+    (directory renames are not object-store-atomic)."""
     from rabbit_in_a_blender_spark.core.fsio import compact_parquet_dir
 
     root = "file://" + str(tmp_path / "wh")
-    wh = Warehouse(root, commit_mode="pointer")
+    wh = Warehouse(root)
     wh.write(
         _rows(spark, 0, 60)
         .withColumn("cell", F.col("id") % 2)
@@ -489,13 +513,15 @@ def test_compact_parquet_dir_uri_pointer_table(spark, tmp_path):
             "cell", F.col("id") % 2
         ).repartition(4).write.mode("append").parquet(resolve_pointer(t))
     rows_before = sorted(r["id"] for r in wh.read(spark, "work", "t").collect())
-    before, after = compact_parquet_dir(spark, t, commit_mode="pointer")
+    before, after = compact_parquet_dir(spark, t)
     assert after < before
     assert sorted(
         r["id"] for r in wh.read(spark, "work", "t").collect()
     ) == rows_before
-    with pytest.raises(ValueError, match="only commit_mode='pointer'"):
-        compact_parquet_dir(spark, t, commit_mode="rename")
+    plain = str(tmp_path / "plain")
+    _rows(spark, 0, 10).write.parquet(plain)
+    with pytest.raises(ValueError, match="plain directory at a URI"):
+        compact_parquet_dir(spark, "file://" + plain)
 
     # partitioned layout survives the URI compaction
     wh.write(
@@ -508,7 +534,7 @@ def test_compact_parquet_dir_uri_pointer_table(spark, tmp_path):
     _rows(spark, 0, 40).withColumn("cell", F.col("id") % 2).write.mode(
         "overwrite"
     ).partitionBy("cell").parquet(live)
-    b, a = compact_parquet_dir(spark, tp, commit_mode="pointer")
+    b, a = compact_parquet_dir(spark, tp)
     new_live = resolve_pointer(tp)
     from rabbit_in_a_blender_spark.core.commit import fs_for
 

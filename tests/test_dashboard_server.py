@@ -201,7 +201,7 @@ def test_run_sweep_appends_history(spark, tmp_path):
 
     runs = list_runs(str(tmp_path / "wh"))
     assert len(runs) == 2
-    stored = spark.read.parquet(str(tmp_path / "wh" / "dqd" / "dqdashboard_results"))
+    stored = wh.read(spark, "dqd", "dqdashboard_results")
     assert stored.count() == 2 * n1
     assert stored.select("run_id").distinct().count() == 2
     # the server's latest-run default sees exactly one run's rows
@@ -216,10 +216,29 @@ def test_run_checks_persists_canonical_schema(spark, tmp_path):
     df = spark.createDataFrame([(1,), (None,)], "id int")
     wh = Warehouse(str(tmp_path / "wh"))
     run_checks(spark, wh, {"isRequired_id": lambda s: is_required(df, "id")})
-    stored = spark.read.parquet(str(tmp_path / "wh" / "dqd" / "dqdashboard_results"))
+    stored = wh.read(spark, "dqd", "dqdashboard_results")
     assert stored.columns == RESULT_COLUMNS
     row = stored.collect()[0]
     assert row["check_family"] == "isRequired"  # derived from the name
     assert row["cdm_table"] is None
     rows = get_results(str(tmp_path / "wh"))
     assert rows[0]["check_name"] == "isRequired_id"
+
+
+def test_load_rows_reads_only_the_live_version(spark, tmp_path):
+    """A compacted (or rewritten) dqd table keeps its previous version
+    beside the live one; the server reads through the pointer, so it
+    sees the rows ``Warehouse.read`` sees, not the retained history."""
+    from rabbit_in_a_blender_spark.pipeline.warehouse import Warehouse
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.append(
+        spark.createDataFrame(
+            [("run-1", datetime(2026, 1, 1))], "run_id string, run_ts timestamp"
+        ),
+        "dqd",
+        "dqdashboard_runs",
+    )
+    wh.compact(spark, "dqd", "dqdashboard_runs")
+    assert wh.read(spark, "dqd", "dqdashboard_runs").count() == 1
+    assert [r["run_id"] for r in list_runs(str(tmp_path / "wh"))] == ["run-1"]

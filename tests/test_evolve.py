@@ -40,7 +40,7 @@ def test_diff_schema_plan(spark):
 
 
 def test_read_evolved_is_zero_rewrite(spark, tmp_path):
-    wh = Warehouse(str(tmp_path / "wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "wh"))
     wh.write(
         spark.createDataFrame(
             [(1, "a", "junk"), (2, "b", "junk")],
@@ -73,7 +73,7 @@ def test_read_evolved_is_zero_rewrite(spark, tmp_path):
 
 
 def test_evolve_rewrites_atomically_and_is_undoable(spark, tmp_path):
-    wh = Warehouse(str(tmp_path / "wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "wh"))
     wh.write(
         spark.createDataFrame([(1, "x")], "id int, name string"), "omop", "t"
     )
@@ -135,7 +135,7 @@ def test_migrate_to_registry_reports_per_table(spark, tmp_path):
             ),
         ]
     )
-    wh = Warehouse(str(tmp_path / "wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "wh"))
     # person exists with drift (int32 id, missing gender, stray column)
     wh.write(
         spark.createDataFrame(

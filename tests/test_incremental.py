@@ -9,6 +9,7 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from rabbit_in_a_blender_spark.core.commit import resolve_pointer
 from rabbit_in_a_blender_spark.ext.dedup import (
     incremental_dedup,
     lsh_candidate_pairs,
@@ -172,7 +173,7 @@ def test_compact_merges_small_files(spark, tmp_path):
     )
     # simulate an append-heavy table: 40 tiny files
     wh.write(df.repartition(40), "work", "events_log")
-    p = wh.path("work", "events_log")
+    p = resolve_pointer(wh.path("work", "events_log"))
     assert sum(1 for f in os.listdir(p) if f.endswith(".parquet")) == 40
     n = wh.compact(spark, "work", "events_log", target_file_bytes=1 << 30)
     assert n == 1

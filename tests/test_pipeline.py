@@ -493,7 +493,7 @@ def test_run_records_step_metrics(spark, wh):
     names = [n for n, _ in pipe.metrics]
     assert any(n.startswith("stage1:person") for n in names)
     assert any(n.startswith("stage2:note") for n in names)
-    assert names[-1] == "invalidate_stale_mappings"
+    assert names[-2:] == ["invalidate_stale_mappings", "seal_transaction"]
     assert all(s >= 0 for _, s in pipe.metrics)
     # rows/bytes accounting (reference cost tally parity,
     # etl/bigquery/gcp.py:106-144): the person stage1 step writes the
@@ -845,9 +845,7 @@ def test_etl_pipeline_on_uri_warehouse(spark, tmp_path):
             ),
         ]
     )
-    wh = Warehouse(
-        "file://" + str(tmp_path / "uri_etl_wh"), commit_mode="pointer"
-    )
+    wh = Warehouse("file://" + str(tmp_path / "uri_etl_wh"))
     upload = spark.createDataFrame(
         [(f"PK_{i}", f"name{i}") for i in range(20)],
         "person_id string, name string",
@@ -892,7 +890,7 @@ def test_etl_pointer_mode_seals_a_transaction_per_run(spark, tmp_path):
             ),
         ]
     )
-    wh = Warehouse(str(tmp_path / "seal_wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "seal_wh"))
     pipe = EtlPipeline(spark, wh, registry)
 
     def upload(n):
@@ -944,7 +942,7 @@ def test_etl_crash_mid_run_leaves_snapshot_consistent(spark, tmp_path, monkeypat
             ),
         ]
     )
-    wh = Warehouse(str(tmp_path / "crash_wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "crash_wh"))
     pipe = EtlPipeline(spark, wh, registry)
 
     def upload(n):
@@ -1008,7 +1006,7 @@ def test_cleanup_seals_manifest_drops_on_pointer_warehouse(spark, tmp_path):
             ),
         ]
     )
-    wh = Warehouse(str(tmp_path / "clean_wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "clean_wh"))
     pipe = EtlPipeline(spark, wh, registry)
     upload = spark.createDataFrame(
         [(f"PK_{i}", f"n{i}") for i in range(6)],
@@ -1135,7 +1133,7 @@ def test_etl_job_budget_and_schema_memo(spark, tmp_path):
 
     from rabbit_in_a_blender_spark.core.commit import POINTER, resolve_pointer
 
-    wh = Warehouse(str(tmp_path / "budget_wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "budget_wh"))
     pipe = EtlPipeline(spark, wh, REGISTRY, io_metrics=False)
     inputs = _inputs(spark)
     before = _max_job_id(spark)

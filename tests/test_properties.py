@@ -422,7 +422,7 @@ def test_txn_manifest_interleaving_law(ops):
 
     root = tempfile.mkdtemp(prefix="riab_txn_prop_")
     try:
-        wh = Warehouse(os.path.join(root, "wh"), commit_mode="pointer")
+        wh = Warehouse(os.path.join(root, "wh"))
 
         def put(table, payload):
             # the seal path: a plain pointer commit + txn.include —

@@ -27,7 +27,7 @@ def _ids(df):
 
 
 def test_txn_commit_is_all_or_nothing_for_snapshot_readers(spark, tmp_path):
-    wh = Warehouse(str(tmp_path / "wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "wh"))
     with wh.transaction() as txn:
         txn.write(_rows(spark, 0, 10), "omop", "a")
         txn.write(_rows(spark, 100, 105), "omop", "b")
@@ -63,7 +63,7 @@ def test_txn_commit_is_all_or_nothing_for_snapshot_readers(spark, tmp_path):
 
 
 def test_txn_rollback_on_exception_repoints_tables(spark, tmp_path):
-    wh = Warehouse(str(tmp_path / "wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "wh"))
     with wh.transaction() as txn:
         txn.write(_rows(spark, 0, 5), "omop", "t")
     with pytest.raises(RuntimeError, match="boom"):
@@ -85,7 +85,7 @@ def test_txn_rollback_on_exception_repoints_tables(spark, tmp_path):
 
 
 def test_txn_optimistic_concurrency_one_winner(spark, tmp_path):
-    wh = Warehouse(str(tmp_path / "wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "wh"))
     with wh.transaction() as txn:
         txn.write(_rows(spark, 0, 5), "omop", "t")
 
@@ -106,7 +106,7 @@ def test_txn_optimistic_concurrency_one_winner(spark, tmp_path):
 
 
 def test_txn_pins_protect_manifest_versions_from_pruning(spark, tmp_path):
-    wh = Warehouse(str(tmp_path / "wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "wh"))
     with wh.transaction() as txn:
         txn.write(_rows(spark, 0, 7), "omop", "t")
     target = wh.path("omop", "t")
@@ -128,7 +128,7 @@ def test_txn_pins_protect_manifest_versions_from_pruning(spark, tmp_path):
 
 
 def test_txn_drop_is_logical_until_manifests_retire(spark, tmp_path):
-    wh = Warehouse(str(tmp_path / "wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "wh"))
     with wh.transaction() as txn:
         txn.write(_rows(spark, 0, 5), "omop", "a")
         txn.write(_rows(spark, 0, 9), "omop", "b")
@@ -143,11 +143,8 @@ def test_txn_drop_is_logical_until_manifests_retire(spark, tmp_path):
     assert wh.exists("omop", "b")  # physical files untouched
 
 
-def test_txn_requires_pointer_mode_and_tracks_versions(spark, tmp_path):
-    wh_rename = Warehouse(str(tmp_path / "wr"), commit_mode="rename")
-    with pytest.raises(ValueError, match="pointer"):
-        wh_rename.begin()
-    wh = Warehouse(str(tmp_path / "wp"), commit_mode="pointer")
+def test_txn_tracks_versions(spark, tmp_path):
+    wh = Warehouse(str(tmp_path / "wp"))
     txn = wh.begin()
     v = txn.write(_rows(spark, 0, 3), "omop", "t")
     assert v == current_version(wh.path("omop", "t")) == 1
@@ -163,9 +160,7 @@ def test_txn_on_uri_root_through_hadoop_fs(spark, tmp_path):
     manifest/pin/pointer operation routed through the session's Hadoop
     FileSystem (the same JVM connector stack an hdfs:// or s3a://
     warehouse resolves)."""
-    wh = Warehouse(
-        "file://" + str(tmp_path / "uri_txn_wh"), commit_mode="pointer"
-    )
+    wh = Warehouse("file://" + str(tmp_path / "uri_txn_wh"))
     with wh.transaction() as txn:
         txn.write(_rows(spark, 0, 8), "omop", "a")
         txn.write(_rows(spark, 50, 53), "omop", "b")
@@ -193,7 +188,7 @@ def test_vacuum_reclaims_orphans_and_respects_pins(spark, tmp_path):
     is what releases their pins."""
     from rabbit_in_a_blender_spark.core.commit import pointer_commit
 
-    wh = Warehouse(str(tmp_path / "wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "wh"))
     with wh.transaction() as txn:
         txn.write(_rows(spark, 0, 7), "omop", "t")
     target = wh.path("omop", "t")
@@ -232,7 +227,7 @@ def test_vacuum_reclaims_orphans_and_respects_pins(spark, tmp_path):
 def test_at_snapshot_is_a_frozen_readonly_view(spark, tmp_path):
     """r13: at_snapshot() freezes one manifest — reads stay on it while
     the live warehouse moves on; writes through the view raise."""
-    wh = Warehouse(str(tmp_path / "wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "wh"))
     with wh.transaction() as txn:
         txn.write(_rows(spark, 0, 6), "omop", "a")
         txn.write(_rows(spark, 0, 3), "omop", "b")
@@ -251,7 +246,7 @@ def test_at_snapshot_is_a_frozen_readonly_view(spark, tmp_path):
     with pytest.raises(FileNotFoundError, match="not in transaction"):
         snap.read(spark, "omop", "zzz")
     # a warehouse with no committed transaction has no snapshot
-    empty = Warehouse(str(tmp_path / "empty"), commit_mode="pointer")
+    empty = Warehouse(str(tmp_path / "empty"))
     with pytest.raises(FileNotFoundError, match="no committed transaction"):
         empty.at_snapshot()
 
@@ -267,7 +262,7 @@ def test_txn_concurrent_snapshot_readers_never_see_torn_views(tmp_path):
     from rabbit_in_a_blender_spark.core.commit import _vdir, pointer_commit
     from rabbit_in_a_blender_spark.pipeline.txn import live_manifest
 
-    wh = Warehouse(str(tmp_path / "wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "wh"))
 
     def put(table, payload):
         def wf(d):
@@ -326,7 +321,7 @@ def test_txn_concurrent_snapshot_readers_never_see_torn_views(tmp_path):
 def test_register_views_live_and_snapshot(spark, tmp_path):
     """r13: spark.sql ergonomics — live views re-resolve the pointer at
     registration; snapshot views stay pinned to their manifest."""
-    wh = Warehouse(str(tmp_path / "wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "wh"))
     with wh.transaction() as txn:
         txn.write(_rows(spark, 0, 9), "omop", "a")
     snap = wh.at_snapshot()
@@ -353,7 +348,7 @@ def test_analyze_table_stats_and_staleness(spark, tmp_path):
         table_stats,
     )
 
-    wh = Warehouse(str(tmp_path / "wh"), commit_mode="pointer")
+    wh = Warehouse(str(tmp_path / "wh"))
     df = _rows(spark, 0, 100).withColumn(
         "grp", F.col("id") % 10
     ).withColumn("maybe", F.when(F.col("id") % 4 == 0, F.col("id")))
