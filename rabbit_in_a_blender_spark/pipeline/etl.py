@@ -18,19 +18,22 @@ lock, mirroring the reference's global lock etl/etl.py:427-442).
 
 from __future__ import annotations
 
+import json
 import logging
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
-from dataclasses import dataclass, field
+from contextlib import contextmanager, nullcontext
+from dataclasses import dataclass, field, fields
 from functools import reduce
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
 
+from ..core import observe
 from ..core.caching import local_frame
 from ..core.registry import SchemaRegistry, TableSpec
 from ..mapping.swap import apply_fk_swaps, apply_pk_swap, swap_merge
@@ -73,6 +76,9 @@ class StepMetric:
     def __iter__(self):
         # (name, seconds) unpacking kept for existing consumers
         return iter((self.name, self.seconds))
+
+
+IO_FIELDS = [f.name for f in fields(StepMetric)][2:]  # the rows/bytes fields
 
 
 @dataclass
@@ -143,9 +149,10 @@ class EtlPipeline:
         # the reference's per-query cost/time accounting
         # (etl/bigquery/gcp.py:106-144, totals at exit etl_base.py:65-67).
         # I/O numbers are attached after run() from Spark's status store
-        # via per-step job groups (thread-local, so the level fan-out
-        # attributes correctly).  ``io_metrics=False`` skips job-group
-        # tagging and the post-run status-store read entirely (wall-clock
+        # (core.observe) via per-step job groups, set on every thread
+        # that works for a step: the level fan-out and the prefetch and
+        # bookkeeping pool threads (_submit).  ``io_metrics=False`` skips
+        # job-group tagging and the post-run status-store read (wall-clock
         # is still recorded) — benchmarks use it so the diagnostic tally
         # never taints the timed path (r4 bench adjudication).
         self.io_metrics = io_metrics
@@ -160,113 +167,32 @@ class EtlPipeline:
         # mappings), not one read-merge-rewrite per column.
         self._stcm_queue: list[tuple[tuple[int, str, int], DataFrame]] = []
 
+    def _tagged(self, name: str):
+        """Job group of step ``name``: the end of :meth:`run` adds the
+        I/O of the jobs launched inside it to the step's metric."""
+        if not self.io_metrics:
+            return nullcontext()
+        return observe.job_group(self.spark, f"riab:{name}")
+
     @contextmanager
     def _step(self, name: str):
-        sc = self.spark.sparkContext
         t0 = time.perf_counter()
-        if self.io_metrics:
-            try:
-                # Thread-local job group: every Spark job this step
-                # launches on THIS thread is attributed to it in the
-                # status store.  (Jobs launched from prefetch pool
-                # threads carry no group and land in the "untracked"
-                # bucket — see _collect_io.)
-                sc.setJobGroup(f"riab:{name}", name, False)
-            except Exception:  # job-group tagging is best-effort
-                pass
         try:
-            yield
+            with self._tagged(name):
+                yield
         finally:
-            if self.io_metrics:
-                try:
-                    sc.setLocalProperty("spark.jobGroup.id", None)
-                    sc.setLocalProperty("spark.job.description", None)
-                except Exception:
-                    pass
             self.metrics.append(StepMetric(name, round(time.perf_counter() - t0, 3)))
 
-    def _next_job_id(self) -> int:
-        """Highest job id the status store has seen + 1 (so a later
-        _collect_io only attributes THIS run's jobs)."""
-        try:
-            store = self.spark.sparkContext._jsc.sc().statusStore()
-            jobs = store.jobsList(None)
-            mx = -1
-            for i in range(jobs.size()):
-                mx = max(mx, int(jobs.apply(i).jobId()))
-            return mx + 1
-        except Exception:
-            return 0
+    def _submit(self, pool: ThreadPoolExecutor, table: str, fn, *args):
+        """``pool.submit`` whose Spark jobs count toward the table's
+        stage-1 step: job groups are thread-local, so the pool thread
+        tags itself."""
 
-    def _collect_io(self, min_job_id: int) -> dict[str, dict[str, int]]:
-        """step name → summed stage I/O metrics from the status store.
+        def tagged():
+            with self._tagged(f"stage1:{table}"):
+                return fn(*args)
 
-        Py4J access to AppStatusStore (the store behind the UI/REST API;
-        populated with spark.ui.enabled=false too).  Every failure
-        degrades to 'no I/O numbers', never to a run failure.
-
-        Known attribution ambiguity (acceptable for a best-effort
-        diagnostic tally): a stage SHARED between jobs of different
-        riab job groups — e.g. a shuffle stage skipped/reused by a
-        later job — maps to whichever group's job the iteration sees
-        last, so its I/O lands wholly in one arbitrary step rather
-        than being split."""
-        try:
-            jsc = self.spark.sparkContext._jsc.sc()
-            jsc.listenerBus().waitUntilEmpty()
-            store = jsc.statusStore()
-            jobs = store.jobsList(None)
-            stage_group: dict[int, str] = {}
-            for i in range(jobs.size()):
-                j = jobs.apply(i)
-                if int(j.jobId()) < min_job_id:
-                    continue
-                grp = j.jobGroup()
-                if not grp.isDefined():
-                    continue
-                g = grp.get()
-                if not g.startswith("riab:"):
-                    continue
-                sids = j.stageIds()
-                for x in range(sids.size()):
-                    stage_group[int(sids.apply(x))] = g[len("riab:"):]
-            dflt = lambda n: getattr(store, f"stageList$default${n}")()
-            stages = store.stageList(None, dflt(2), dflt(3), dflt(4), dflt(5))
-            # last attempt per stage id (retries would double-count)
-            latest: dict[int, object] = {}
-            for i in range(stages.size()):
-                s = stages.apply(i)
-                sid = int(s.stageId())
-                if sid not in latest or int(s.attemptId()) > int(
-                    latest[sid].attemptId()
-                ):
-                    latest[sid] = s
-            agg: dict[str, dict[str, int]] = {}
-            for sid, s in latest.items():
-                g = stage_group.get(sid)
-                if g is None:
-                    continue
-                a = agg.setdefault(
-                    g,
-                    {
-                        "input_rows": 0,
-                        "input_bytes": 0,
-                        "output_rows": 0,
-                        "output_bytes": 0,
-                        "shuffle_read_bytes": 0,
-                        "shuffle_write_bytes": 0,
-                    },
-                )
-                a["input_rows"] += int(s.inputRecords())
-                a["input_bytes"] += int(s.inputBytes())
-                a["output_rows"] += int(s.outputRecords())
-                a["output_bytes"] += int(s.outputBytes())
-                a["shuffle_read_bytes"] += int(s.shuffleReadBytes())
-                a["shuffle_write_bytes"] += int(s.shuffleWriteBytes())
-            return agg
-        except Exception:
-            log.debug("status-store I/O metrics unavailable", exc_info=True)
-            return {}
+        return pool.submit(tagged)
 
     def _check_usagi_concepts(
         self,
@@ -361,7 +287,7 @@ class EtlPipeline:
         spec: TableSpec,
         inputs: TableInputs,
         etl_start: str | None,
-        pool: ThreadPoolExecutor | None = None,
+        pool: ThreadPoolExecutor,
     ):
         """Union+DISTINCT the uploads, run custom-concept/usagi mapping,
         and materialize the mapped upload in the work zone (the
@@ -390,10 +316,7 @@ class EtlPipeline:
         fatal, bookkeeping = [], []
 
         def _later(futures, fn, *args):
-            if pool is None:
-                fn(*args)
-            else:
-                futures.append(pool.submit(fn, *args))
+            futures.append(self._submit(pool, spec.name, fn, *args))
         if self.skip_upload:
             # Reference -s path (etl/etl.py:211): reuse the persisted
             # work.{t}__{col}__usagi tables from the previous run —
@@ -535,6 +458,7 @@ class EtlPipeline:
             if spec.pk:
                 event_cols = list(spec.event_cols)
                 prior = self._load_swap(spec.name)
+                swap_name = self._swap_name(spec.name)
                 swap = swap_merge(
                     prior,
                     upload.select(
@@ -552,7 +476,7 @@ class EtlPipeline:
                     # Re-run path: the swap lineage scans the PRIOR swap
                     # parquet, which the write below replaces — write
                     # first, read back, so consumers see the new files.
-                    swap = self._write_keyed(swap, self._swap_name(spec.name), "x")
+                    swap = self._write_keyed(swap, swap_name, "x")
                 else:
                     # first-run plain path: the swap lineage is pinned by
                     # the persist inside assign_ids (and reads no prior
@@ -562,12 +486,14 @@ class EtlPipeline:
                     # swap/bookkeeping writes overlap the final merge
                     # instead of serializing before it.
                     bookkeeping.append(
-                        pool.submit(
-                            self._write_keyed, swap, self._swap_name(spec.name), "x"
+                        self._submit(
+                            pool, spec.name, self._write_keyed, swap, swap_name, "x"
                         )
                     )
                 own_swap = swap
-                bookkeeping.append(pool.submit(self._record_id_map, spec.name, swap))
+                bookkeeping.append(
+                    self._submit(pool, spec.name, self._record_id_map, spec.name, swap)
+                )
                 upload = apply_pk_swap(
                     upload.withColumnRenamed(spec.pk, "x"),
                     swap,
@@ -914,7 +840,7 @@ class EtlPipeline:
         # the STCM merge records THIS run's mappings only
         self._stcm_queue = []
         first_metric = len(self.metrics)
-        min_job_id = self._next_job_id() if self.io_metrics else 0
+        since = observe.next_job_id(self.spark) if self.io_metrics else 0
 
         with ThreadPoolExecutor(max(4, 2 * max_parallel_tables)) as pool:
 
@@ -943,7 +869,9 @@ class EtlPipeline:
                 # pool threads while this level runs, so the level
                 # boundary only serializes the swap/FK-dependent stages.
                 for nxt in levels[i + 1] if i + 1 < len(levels) else []:
-                    prefetched[nxt] = pool.submit(
+                    prefetched[nxt] = self._submit(
+                        pool,
+                        nxt,
                         self._prepare_upload,
                         self.registry[nxt],
                         inputs[nxt],
@@ -980,13 +908,22 @@ class EtlPipeline:
                 if is_pointer_table(self.wh.path("omop", t)):
                     txn.include("omop", t)
             txn.commit()
-        # Attach rows/bytes from the status store to this run's steps
-        # (jobs from prefetch pool threads carry no group; their I/O is
-        # not attributed to a step — by design, they overlap steps).
-        io = self._collect_io(min_job_id) if self.io_metrics else {}
-        for m in self.metrics[first_metric:]:
-            for k, v in io.get(m.name, {}).items():
-                setattr(m, k, v)
+        # Attach rows/bytes to this run's steps: every job carries its
+        # step's group, pool-thread jobs included (_submit).  The tally
+        # is a diagnostic — a status store that cannot be read leaves
+        # the I/O fields at 0 with a warning, and the run stands.
+        if self.io_metrics:
+            try:
+                jobs = observe.jobs(self.spark, since)
+            except (Py4JError, json.JSONDecodeError):
+                log.warning("ETL run: status-store I/O unavailable", exc_info=True)
+                jobs = []
+            steps = {f"riab:{m.name}": m for m in self.metrics[first_metric:]}
+            for j in jobs:
+                if j.group in steps:
+                    m = steps[j.group]
+                    for k in IO_FIELDS:
+                        setattr(m, k, getattr(m, k) + getattr(j, k))
         total = round(sum(s for _, s in self.metrics), 3)
         log.info("ETL run: %.3fs total; steps: %s", total, self.metrics)
         return processed

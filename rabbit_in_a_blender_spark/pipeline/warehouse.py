@@ -405,10 +405,11 @@ class Warehouse:
         pipeline.  Requires saveAsTable (bucket metadata lives in the
         catalog, session-local derby here, HMS/Glue on a cluster).
 
-        Replacement is staged like ``write``: the new data lands in a
-        fresh location under a staging table name, then the catalog entry
-        is swapped and the old files removed — so a plan may lazily read
-        the table being replaced (swap-table extension on re-runs).
+        Replacement is a catalog swap, not a pointer commit: the new data
+        lands in a fresh location under a staging table name, then the
+        catalog entry is renamed over the old one and the old files
+        removed — so a plan may lazily read the table being replaced
+        (swap-table extension on re-runs).
         """
         if self._uri:
             raise NotImplementedError(

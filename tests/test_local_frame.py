@@ -17,6 +17,7 @@ from pathlib import Path
 
 import pytest
 
+from rabbit_in_a_blender_spark.core import observe
 from rabbit_in_a_blender_spark.core.caching import local_frame
 
 PKG = Path(__file__).resolve().parent.parent / "rabbit_in_a_blender_spark"
@@ -120,23 +121,19 @@ def test_plan_is_local_table_scan(spark):
     assert "LocalTableScan" in plan, plan
 
 
-def _jobs_in_group(spark, group, action) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "job count probe")
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_collect_schedules_no_job(spark):
     rows = [(i, i * 2) for i in range(256)]
     df = local_frame(spark, rows, "bucket long, cnt long")
-    assert _jobs_in_group(spark, "local_frame_probe", df.collect) == 0
-    # the probe does see jobs: a parallelized list frame needs one
     listed = spark.createDataFrame(rows, "bucket long, cnt long")
-    assert _jobs_in_group(spark, "list_frame_probe", listed.collect) >= 1
+    since = observe.next_job_id(spark)
+    with observe.job_group(spark, "local_frame_probe"):
+        df.collect()
+    # the probe does see jobs: a parallelized list frame needs one
+    with observe.job_group(spark, "list_frame_probe"):
+        listed.collect()
+    groups = [j.group for j in observe.jobs(spark, since)]
+    assert "local_frame_probe" not in groups
+    assert "list_frame_probe" in groups
 
 
 def test_only_caching_builds_frames_from_driver_rows():

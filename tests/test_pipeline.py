@@ -9,8 +9,10 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from rabbit_in_a_blender_spark.core import observe
 from rabbit_in_a_blender_spark.core.registry import ColumnSpec, SchemaRegistry, TableSpec
 from rabbit_in_a_blender_spark.pipeline.etl import (
+    IO_FIELDS,
     EtlError,
     EtlPipeline,
     TableInputs,
@@ -505,6 +507,57 @@ def test_run_records_step_metrics(spark, wh):
     for f in ("input_rows", "input_bytes", "output_rows", "output_bytes",
               "shuffle_read_bytes", "shuffle_write_bytes"):
         assert getattr(p, f) >= 0
+
+
+def test_pool_thread_jobs_carry_their_step_group(spark, wh):
+    """Prefetched uploads and bookkeeping writes run on pool threads;
+    their jobs still carry the group of the step they work for, so no
+    job of the run (and none of its I/O) is left out of the steps."""
+    pipe = EtlPipeline(spark, wh, REGISTRY)
+    since = observe.next_job_id(spark)
+    pipe.run(_inputs(spark))
+    jobs = observe.jobs(spark, since)
+    assert jobs
+    untagged = [j for j in jobs if not (j.group or "").startswith("riab:")]
+    assert [(j.id, j.description) for j in untagged] == []
+    for k in IO_FIELDS:
+        in_steps = sum(getattr(m, k) for m in pipe.metrics)
+        assert in_steps == sum(getattr(j, k) for j in jobs), k
+
+
+def test_unreadable_status_store_leaves_io_at_zero(spark, wh, monkeypatch, caplog):
+    import logging
+
+    from py4j.protocol import Py4JError
+
+    from rabbit_in_a_blender_spark.pipeline import etl
+
+    def unreadable(*args, **kwargs):
+        raise Py4JError("status store unavailable")
+
+    monkeypatch.setattr(observe, "jobs", unreadable)
+    registry = SchemaRegistry(
+        [
+            TableSpec(
+                name="person",
+                columns=[ColumnSpec("person_id", "int64", required=True)],
+                pk="person_id",
+            )
+        ]
+    )
+    upload = spark.createDataFrame([("PK_1",), ("PK_2",)], "person_id string")
+    pipe = EtlPipeline(spark, wh, registry)
+    with caplog.at_level(logging.WARNING, logger=etl.__name__):
+        assert pipe.run({"person": TableInputs(uploads=[upload])}) == ["person"]
+    assert [
+        r
+        for r in caplog.records
+        if r.levelno == logging.WARNING
+        and "status-store I/O unavailable" in r.getMessage()
+    ]
+    assert wh.read(spark, "omop", "person").count() == 2
+    assert pipe.metrics
+    assert all(getattr(m, k) == 0 for m in pipe.metrics for k in IO_FIELDS)
 
 
 @pytest.mark.parametrize("n_rows,collapsed", [(2, True), (3, False)])
@@ -1109,13 +1162,6 @@ def test_duplicate_row_warning_counts_groups_once(spark, wh, caplog):
     assert not [r for r in caplog.records if "duplicate row group" in r.getMessage()]
 
 
-def _max_job_id(spark) -> int:
-    jsc = spark.sparkContext._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    jobs = jsc.statusStore().jobsList(None)
-    return max((int(jobs.apply(i).jobId()) for i in range(jobs.size())), default=-1)
-
-
 #: Spark jobs one pointer-mode run of ``_inputs`` may launch.  Recorded
 #: when the source_to_concept_map merge became one write per run, the
 #: usagi duplicate check moved onto the collected rows, the duplicate-row
@@ -1136,9 +1182,9 @@ def test_etl_job_budget_and_schema_memo(spark, tmp_path):
     wh = Warehouse(str(tmp_path / "budget_wh"))
     pipe = EtlPipeline(spark, wh, REGISTRY, io_metrics=False)
     inputs = _inputs(spark)
-    before = _max_job_id(spark)
+    since = observe.next_job_id(spark)
     pipe.run(inputs)
-    jobs = _max_job_id(spark) - before
+    jobs = len(observe.jobs(spark, since))
     assert jobs <= ETL_JOB_BUDGET, jobs
 
     tables = sorted(

@@ -1,16 +1,15 @@
-"""Per-job profile of one or more catalog queries (r13 optimization).
+"""Per-job profile of bench rows: catalog queries and the bench-only
+ETL rows (``etl_pipeline_two_stage``, ``etl_pipeline_bucketed``).
 
-Usage: python tools/profile_query.py q1_pricing_summary ext_semantic_dedup ...
+Usage: python tools/profile_query.py q1_pricing_summary etl_pipeline_two_stage ...
 
-For each query: one untimed warmup pass (codegen + parquet footers),
-then a timed pass through the noop sink; afterwards every Spark job the
-timed pass launched is listed from the AppStatusStore (job id, wall ms,
-#tasks, shuffle read/write bytes, callsite/description) so the wall
-time decomposes into the actual actions — the measurement step of
-guide §1 when the UI is disabled.
-
-Timing methodology matches bench.py (noop sink, steady-state pass);
-this tool is diagnostic only and never runs under the driver.
+Per row: an untimed warmup pass, then a timed pass (queries through the
+noop sink, as bench.py times them).  Its wall time splits into
+plan-build (driver time in the query function outside its jobs), eager
+(the critical path of jobs the function itself launched), the jobs'
+critical path (union of their intervals) and job-sum, and driver-only
+(wall minus that critical path).  Jobs are listed from ``core.observe``;
+eager ones are marked ``*``.  Diagnostic only.
 """
 
 from __future__ import annotations
@@ -18,67 +17,32 @@ from __future__ import annotations
 import os
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench
+from rabbit_in_a_blender_spark.core import observe
 from rabbit_in_a_blender_spark.core.session import get_spark
 
-
-def _jobs_since(spark, min_job_id: int):
-    jsc = spark.sparkContext._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    store = jsc.statusStore()
-    jobs = store.jobsList(None)
-    out = []
-    stage_meta = {}
-    dflt = lambda n: getattr(store, f"stageList$default${n}")()
-    stages = store.stageList(None, dflt(2), dflt(3), dflt(4), dflt(5))
-    for i in range(stages.size()):
-        s = stages.apply(i)
-        stage_meta[int(s.stageId())] = (
-            int(s.numCompleteTasks()),
-            int(s.shuffleReadBytes()),
-            int(s.shuffleWriteBytes()),
-            int(s.inputBytes()),
-        )
-    for i in range(jobs.size()):
-        j = jobs.apply(i)
-        jid = int(j.jobId())
-        if jid < min_job_id:
-            continue
-        sub = j.submissionTime()
-        comp = j.completionTime()
-        dur = -1.0
-        if sub.isDefined() and comp.isDefined():
-            dur = (
-                comp.get().getTime() - sub.get().getTime()
-            ) / 1000.0
-        ntasks, srd, swr, inp = 0, 0, 0, 0
-        sids = j.stageIds()
-        for x in range(sids.size()):
-            m = stage_meta.get(int(sids.apply(x)))
-            if m:
-                ntasks += m[0]
-                srd += m[1]
-                swr += m[2]
-                inp += m[3]
-        desc = j.description()
-        name = desc.get() if desc.isDefined() else j.name()
-        out.append((jid, dur, ntasks, srd, swr, inp, str(name)[:110]))
-    out.sort()
-    return out
+BENCH_ROWS = {
+    "etl_pipeline_two_stage": bench.etl_pipeline_bench,
+    "etl_pipeline_bucketed": partial(bench.etl_pipeline_bench, bucketed=True),
+}
 
 
-def _max_job_id(spark) -> int:
-    try:
-        store = spark.sparkContext._jsc.sc().statusStore()
-        jobs = store.jobsList(None)
-        mx = -1
-        for i in range(jobs.size()):
-            mx = max(mx, int(jobs.apply(i).jobId()))
-        return mx + 1
-    except Exception:
-        return 0
+def _pass(spark, fn, sf_dir: str):
+    """One pass of a row: (wall s, build s, first non-eager job id, jobs)."""
+    since = observe.next_job_id(spark)
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    t_build = time.perf_counter() - t0
+    eager_end = observe.next_job_id(spark)
+    if hasattr(df, "write"):  # the ETL rows return (seconds, rows)
+        df.write.format("noop").mode("overwrite").save()
+    wall = time.perf_counter() - t0
+    bench._release_tracked(df)
+    return wall, t_build, eager_end, observe.jobs(spark, since)
 
 
 def main() -> None:
@@ -88,38 +52,28 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     from rabbit_in_a_blender_spark.plans.catalog import all_queries
 
-    queries = all_queries()
+    rows = {**all_queries(), **BENCH_ROWS}
     spark.range(1000).count()
 
-    def release(df):
-        for c in getattr(df, "_graft_cached", []):
-            try:
-                c.unpersist()
-            except Exception:
-                pass
-
     for name in names:
-        fn = queries[name]
-        # warmup
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        release(df)
-        floor = _max_job_id(spark)
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        t_build = time.perf_counter() - t0
-        df.write.format("noop").mode("overwrite").save()
-        t_total = time.perf_counter() - t0
-        release(df)
-        jobs = _jobs_since(spark, floor)
-        jsum = sum(d for _, d, *_ in jobs if d > 0)
-        print(f"\n=== {name}: total {t_total:.3f}s (plan-build {t_build:.3f}s, "
-              f"{len(jobs)} jobs, job-sum {jsum:.3f}s, "
-              f"gap {t_total - jsum:.3f}s) ===")
-        for jid, dur, ntasks, srd, swr, inp, desc in jobs:
-            print(f"  job {jid:>5} {dur:8.3f}s tasks={ntasks:<5} "
-                  f"in={inp/1e6:8.2f}MB srd={srd/1e6:7.2f}MB "
-                  f"swr={swr/1e6:7.2f}MB  {desc}")
+        fn = rows[name]
+        _pass(spark, fn, sf_dir)  # warmup
+        wall, t_build, eager_end, jobs = _pass(spark, fn, sf_dir)
+        eager = observe.union_s([j for j in jobs if j.id < eager_end])
+        union = observe.union_s(jobs)
+        jsum = sum(j.end_s - j.submit_s for j in jobs)
+        # job times are whole milliseconds: clip the rounding below 0
+        driver_only = max(wall - union, 0.0)
+        print(f"\n=== {name}: wall {wall:.3f}s | plan-build "
+              f"{max(t_build - eager, 0.0):.3f}s, eager {eager:.3f}s | "
+              f"{len(jobs)} jobs: critical path {union:.3f}s, job-sum "
+              f"{jsum:.3f}s | driver-only {driver_only:.3f}s ===")
+        for j in jobs:
+            print(f"  job {j.id:>5}{'*' if j.id < eager_end else ' '}"
+                  f"{j.end_s - j.submit_s:8.3f}s tasks={j.tasks:<5} "
+                  f"in={j.input_bytes/1e6:8.2f}MB "
+                  f"srd={j.shuffle_read_bytes/1e6:7.2f}MB "
+                  f"swr={j.shuffle_write_bytes/1e6:7.2f}MB  {j.description[:110]}")
 
 
 if __name__ == "__main__":
