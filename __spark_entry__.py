@@ -61,6 +61,7 @@ belongs to the harness that owns the CORRECTNESS artifacts.
 from __future__ import annotations
 
 import ast
+import functools
 import glob
 import json
 import os
@@ -99,6 +100,27 @@ def _pkg_file(mod: str, root: str) -> str | None:
     return None
 
 
+# queries() fingerprints every catalog query, and their import closures
+# share most engine modules: each source text is parsed once and each
+# tree walked once per process.  Trees are only read (``_dump`` strips
+# docstrings from a copy), so the memoized nodes stay valid.
+@functools.cache
+def _parse(src: str) -> ast.Module:
+    return ast.parse(src)
+
+
+@functools.cache
+def _nodes(node: ast.AST) -> tuple[ast.AST, ...]:
+    return tuple(ast.walk(node))
+
+
+@functools.cache
+def _import_nodes(tree: ast.Module) -> tuple[ast.Import | ast.ImportFrom, ...]:
+    return tuple(
+        n for n in _nodes(tree) if isinstance(n, (ast.Import, ast.ImportFrom))
+    )
+
+
 def _import_closure(
     mod: str,
     root: str,
@@ -122,7 +144,7 @@ def _import_closure(
     files = {path}
     try:
         with open(os.path.join(root, path)) as f:
-            tree = ast.parse(f.read())
+            tree = _parse(f.read())
     except (OSError, SyntaxError):
         return files
     targets: list[str] = []
@@ -131,7 +153,7 @@ def _import_closure(
         if edges is not None:
             edges.setdefault(target, set()).add(name)
 
-    for node in ast.walk(tree):
+    for node in _import_nodes(tree):
         if isinstance(node, ast.Import):
             for a in node.names:
                 if a.name.startswith(_PKG):
@@ -235,7 +257,7 @@ def _reachable_names(defs: dict[str, ast.AST], fn_name: str) -> set[str] | None:
         if name in visited:
             continue
         visited.add(name)
-        for ref in ast.walk(defs[name]):
+        for ref in _nodes(defs[name]):
             if isinstance(ref, ast.Name):
                 names.add(ref.id)
                 if ref.id in defs and ref.id not in visited:
@@ -264,6 +286,7 @@ def _decorator_name(d: ast.AST) -> str | None:
     return None
 
 
+@functools.cache
 def _dump(node: ast.AST) -> str:
     """``ast.dump`` with docstrings stripped (r13): a docstring edit
     documents behavior, it doesn't change it, so it must not flag
@@ -355,7 +378,7 @@ def _fn_fingerprint(
     when given, ClassDefs in the reachable set are fingerprinted at
     method granularity (see :func:`_class_fingerprint`)."""
     try:
-        tree = ast.parse(src)
+        tree = _parse(src)
     except SyntaxError:
         return None
     defs = _module_defs(tree)
@@ -364,7 +387,7 @@ def _fn_fingerprint(
     reach = _reachable_names(defs, fn_name) or set()
     local = sorted(n for n in reach if n in defs)
     imports: list[str] = []
-    for node in ast.walk(tree):
+    for node in _import_nodes(tree):
         if isinstance(node, ast.Import):
             for a in node.names:
                 bound = a.asname or a.name.split(".")[0]
@@ -388,10 +411,12 @@ def _fn_fingerprint(
     return "\n".join(parts + sorted(imports))
 
 
+@functools.cache
 def _import_map(tree: ast.Module, mod: str, mod_path: str, root: str) -> dict[str, str]:
-    """Local binding name → package module it came from."""
+    """Local binding name → package module it came from (shared and
+    memoized: callers only read it)."""
     imap: dict[str, str] = {}
-    for node in ast.walk(tree):
+    for node in _import_nodes(tree):
         if isinstance(node, ast.Import):
             for a in node.names:
                 if a.name.startswith(_PKG):
@@ -423,7 +448,7 @@ def _fn_deep_files(
     the function can't be located (caller goes conservative)."""
     mod_path = _pkg_file(mod, root) or ""
     try:
-        tree = ast.parse(src)
+        tree = _parse(src)
     except SyntaxError:
         return None
     reach = _reachable_names(_module_defs(tree), fn_name)
@@ -492,12 +517,12 @@ def _closure_attrs(
         if p not in cache:
             try:
                 with open(os.path.join(root, p)) as f:
-                    tree = ast.parse(f.read())
+                    tree = _parse(f.read())
             except (OSError, SyntaxError):
                 cache[p] = None
             else:
                 cache[p] = {
-                    a.attr for a in ast.walk(tree)
+                    a.attr for a in _nodes(tree)
                     if isinstance(a, ast.Attribute)
                 }
         if cache[p] is None:
