@@ -95,7 +95,8 @@ def fan_out_for_compute(
             jsize = (
                 df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
             )
-            size = int(jsize.toString())
+            # py4j hands the Scala BigInt back as a Python int
+            size = int(str(jsize))
             if size >= _UNKNOWN_STATS_BYTES:
                 size = None
         except Exception:
@@ -104,6 +105,8 @@ def fan_out_for_compute(
             if size >= target * _FAN_OUT_BYTES_PER_CORE:
                 return df  # same refusal as the file-metadata path
             target = min(target, max(1, -(-size // _PROBE_BYTES_PER_TASK)))
+        if target <= 1:
+            return df  # one task's worth: nothing to fan out to
         try:
             if df.rdd.getNumPartitions() >= target:
                 return df

@@ -5,6 +5,12 @@ Scale notes (100 TB design):
   and dynamic broadcast conversion replace hand-tuned partition counts.
 - ``spark.sql.shuffle.partitions`` is only the *initial* value; AQE
   coalesces. On a real cluster set it to ~2-3x total cores.
+- Cached plans are the exception: AQE does not coalesce or split the
+  shuffles inside a ``persist()``-ed plan unless
+  ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is on
+  (Spark ships it off), so without it a cached frame keeps the initial
+  partition count and every read of it runs that many tasks.  This
+  session turns it on.
 - Session timezone pinned to UTC so date/time functions are deterministic
   and match the DuckDB oracle.
 - Arrow enabled for the few pandas-UDF extension operators.
@@ -36,6 +42,14 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Let AQE size cached plans like every other shuffle.  Off (the
+        # Spark default) every persisted frame keeps all
+        # shuffle.partitions partitions: the cold omop_refresh (perfbench,
+        # seed 501, 4 vCPUs) ran 512 of its 641 tasks as 32-task reads of
+        # KB-sized cached frames; on, it runs 141.  A read that needs the
+        # cache's old hash partitioning now plans its own (small)
+        # shuffle instead.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

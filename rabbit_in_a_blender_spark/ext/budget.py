@@ -76,7 +76,10 @@ def token_budget_select(
     # Persist before the totals job: repartitionByRange samples range
     # boundaries per execution — without the pin, the totals job and the
     # final filter could see different partitionings (same hazard as
-    # assign_ids, operators/sequence.py:56-60).
+    # assign_ids in operators/sequence.py).  AQE may coalesce the range
+    # exchange in the cached plan; merged partitions are adjacent
+    # ranges, so each ``__pid`` is still contiguous and ordered and the
+    # prefix offsets stay exact, as there.
     numbered = with_pid.withColumn("__cum", F.sum(tok).over(w)).persist(
         _disk_only()
     )

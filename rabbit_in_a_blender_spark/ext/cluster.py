@@ -27,6 +27,10 @@ Scale notes (100 TB):
   checkpoint so round N's plan doesn't replay rounds 1..N-1.
 - Convergence is detected with a changed-label count — one action per
   round on the already-persisted frame.
+- Every join and aggregate here is on a node key and nothing reads a
+  partition id, so the result does not depend on how AQE sizes the
+  persisted and checkpointed frames (core/session.py); a read that
+  needs a key distribution the cache no longer has adds a shuffle.
 """
 
 from __future__ import annotations

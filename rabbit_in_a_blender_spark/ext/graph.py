@@ -19,7 +19,9 @@ Execution model (the genuinely-scalable shape, no GraphX dependency):
   iteration is a proper power method;
 - ``localCheckpoint`` every iteration cuts lineage exactly like the
   pointer-jumping loop in ``ext/cluster.py:97`` — without it the plan
-  for iteration N replays 1..N-1.
+  for iteration N replays 1..N-1.  State is joined on the node key
+  only, never by partition position, so AQE sizing the persisted and
+  checkpointed frames (core/session.py) leaves ranks unchanged.
 
 Determinism: iterations run a FIXED count (no data-dependent early
 exit), and every per-node rank is rounded to 8 decimals per iteration

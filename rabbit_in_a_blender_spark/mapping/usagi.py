@@ -10,6 +10,7 @@ concepts legitimately fans out to k rows (§2.J identity contract).
 
 from __future__ import annotations
 
+import csv
 from collections import Counter
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -31,10 +32,31 @@ USAGI_SCHEMA = T.StructType(
 APPROVED_STATUSES = ("APPROVED", "SEMI-APPROVED")
 
 
+def _csv_header(path: str) -> list[str]:
+    """The column names ``spark.read.csv(path, header=True)`` gives a
+    local CSV file, read on the driver: the first non-blank line without
+    a UTF-8 byte-order mark, an empty name as ``_c<i>``,
+    case-insensitive duplicates as ``<name><i>`` (Spark's safe-header
+    rules)."""
+    with open(path, encoding="utf-8-sig", newline="") as f:
+        line = next((ln for ln in f if ln.strip()), "")
+    names = next(csv.reader([line]), [])
+    counts = Counter(n.lower() for n in names)
+    return [
+        f"_c{i}" if not n else f"{n}{i}" if counts[n.lower()] > 1 else n
+        for i, n in enumerate(names)
+    ]
+
+
 def read_usagi_csv(spark: SparkSession, path: str) -> DataFrame:
     """Usagi CSV → typed frame; extra columns in the file are dropped
-    (the reference reads a named subset of the 18-column header)."""
-    raw = spark.read.csv(path, header=True, inferSchema=False)
+    (the reference reads a named subset of the 18-column header).
+
+    The header is parsed on the driver and the read gets an all-string
+    schema, so Spark runs no job just to learn the column names."""
+    header = _csv_header(path)
+    schema = T.StructType([T.StructField(n, T.StringType()) for n in header])
+    raw = spark.read.csv(path, schema=schema, header=True)
     cols = []
     for f in USAGI_SCHEMA.fields:
         c = F.col(f.name).cast(f.dataType) if f.name in raw.columns else F.lit(None).cast(f.dataType)

@@ -60,6 +60,12 @@ def assign_ids(
     # caller's materialization could see rows in *different* partitions —
     # duplicate/skipped ids (silent corruption of the stable-PK contract).
     # DISK_ONLY: this frame is data-sized, not metadata-sized.
+    # AQE sizes the cached plan (core/session.py), so it may coalesce
+    # the range exchange: it only merges ADJACENT range partitions, so
+    # each ``__pid`` is still one contiguous, ordered range, and the
+    # ``__pid`` order is still the global order.  The counts below and
+    # every later read see that one cached numbering, so the ids stay
+    # dense and ordered whatever partition count AQE picks.
     numbered = with_pid.withColumn("__rn", F.row_number().over(w)).persist(
         _disk_only()
     )

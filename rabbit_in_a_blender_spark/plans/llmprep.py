@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..core.caching import track_cache
 from ..core.io import load_tables
 from ..ext.bpe import bpe_token_count_sql, bpe_token_ids_sql
 from ..ext.decontam import contamination_overlap, decontaminate
@@ -137,7 +138,10 @@ def ext_curation_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     split = train_val_test_split(kept, "doc_id", seed="r6c")
     sharded = deterministic_shuffle(split, "doc_id", seed="r6s", shards=4)
-    return sharded.select("doc_id", "n_tokens", "cum_tokens", "split", "shard_id")
+    return track_cache(
+        sharded.select("doc_id", "n_tokens", "cum_tokens", "split", "shard_id"),
+        kept._graft_cached,
+    )
 
 
 @register(
@@ -166,13 +170,16 @@ def ext_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
     )
-    return token_budget_select(
+    kept = token_budget_select(
         scored,
         "n_tokens",
         50_000,
         [F.desc("n_tokens"), F.asc("doc_id")],
         mode="scalable",
-    ).select("doc_id", "n_tokens", "cum_tokens")
+    )
+    return track_cache(
+        kept.select("doc_id", "n_tokens", "cum_tokens"), kept._graft_cached
+    )
 
 
 @register(

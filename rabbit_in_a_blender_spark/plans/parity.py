@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..core.caching import track_cache
 from ..core.io import load_tables
 from ..operators.aggregates import distribution_stats, duplicate_groups, sorted_string_agg
 from ..operators.dedup import dedup_keep_first
@@ -534,10 +535,14 @@ def seq_assign_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")["customer"]
     keys = c.select("c_mktsegment", "c_nationkey").distinct()
     out = assign_ids(keys, ["c_mktsegment", "c_nationkey"], offset=100, mode="scalable")
-    return out.select(
-        "c_mktsegment",
-        F.col("c_nationkey").cast("long").alias("nation_id"),
-        F.col("assigned_id").cast("long").alias("assigned_id"),
+    # hand the numbered frame's pin on, or a caller cannot release it
+    return track_cache(
+        out.select(
+            "c_mktsegment",
+            F.col("c_nationkey").cast("long").alias("nation_id"),
+            F.col("assigned_id").cast("long").alias("assigned_id"),
+        ),
+        out._graft_cached,
     )
 
 

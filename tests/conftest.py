@@ -32,3 +32,17 @@ def spark():
     s = get_spark("tests", master=f"local[{cpus}]", shuffle_partitions=4)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture()
+def production_partitions(spark):
+    """Run a test at the engine's default shuffle partition count (32,
+    see core.session) instead of the suite's 4, restored afterwards: a
+    frame that AQE does not size runs 32 tasks per read here."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try:
+        yield spark
+    finally:
+        spark.conf.set(key, old)

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from rabbit_in_a_blender_spark.core.caching import unpersist_intermediates
 from rabbit_in_a_blender_spark.ext.budget import (
     deterministic_shuffle,
     token_budget_select,
@@ -17,6 +18,23 @@ def _docs(spark, n=200):
         F.col("id").alias("doc_id"),
         ((F.col("id") * 37) % 100 + 1).alias("n_tokens"),
     )
+
+
+@pytest.mark.parametrize("n", [0, 1, 3_000])
+def test_strict_and_scalable_agree_at_production_partitions(
+    production_partitions, n
+):
+    """AQE may coalesce the cached range exchange at 32 shuffle
+    partitions; the per-partition prefix offsets stay exact."""
+    df = _docs(production_partitions, n)
+    order = [F.desc("n_tokens"), F.asc("doc_id")]
+    budget = 25 * n + 1
+    strict = token_budget_select(df, "n_tokens", budget, order, mode="strict")
+    scalable = token_budget_select(df, "n_tokens", budget, order, mode="scalable")
+    s = sorted((r["doc_id"], r["cum_tokens"]) for r in strict.collect())
+    c = sorted((r["doc_id"], r["cum_tokens"]) for r in scalable.collect())
+    unpersist_intermediates(scalable)
+    assert s == c and bool(s) == (n > 0)
 
 
 def test_strict_and_scalable_agree(spark):

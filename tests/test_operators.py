@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from rabbit_in_a_blender_spark.core.caching import unpersist_intermediates
 from rabbit_in_a_blender_spark.operators.aggregates import sorted_string_agg
 from rabbit_in_a_blender_spark.operators.dedup import dedup_keep_first
 from rabbit_in_a_blender_spark.operators.joins import (
@@ -40,6 +42,32 @@ def test_merge_delete(spark):
     target = spark.createDataFrame([(1,), (2,), (3,)], "id int")
     source = spark.createDataFrame([(2,)], "id int")
     assert sorted(r["id"] for r in merge_delete(target, source, ["id"]).collect()) == [1, 3]
+
+
+def test_session_lets_aqe_size_cached_plans(spark):
+    """Without this conf a persisted plan keeps every initial shuffle
+    partition: each read of a KB-sized cached frame runs 32 tasks."""
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    assert spark.conf.get(key) == "true"
+
+
+@pytest.mark.parametrize("n", [0, 1, 3_000])
+def test_assign_ids_at_production_partitions(production_partitions, n):
+    """At 32 shuffle partitions AQE coalesces the persisted numbered
+    frame to at most defaultParallelism partitions, and the scalable ids
+    still equal the strict global-order window's."""
+    spark = production_partitions
+    df = spark.range(n).select(
+        F.format_string("k%05d", (F.col("id") * 7919) % max(n, 1)).alias("k")
+    )
+    scalable = assign_ids(df, ["k"], 10)
+    got = {r["k"]: r["assigned_id"] for r in scalable.collect()}
+    (numbered,) = scalable._graft_cached
+    assert numbered.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    unpersist_intermediates(scalable)
+    strict = assign_ids(df, ["k"], 10, mode="strict")
+    assert got == {r["k"]: r["assigned_id"] for r in strict.collect()}
+    assert len(got) == n
 
 
 def test_assign_ids_strict_vs_scalable_identical(spark):

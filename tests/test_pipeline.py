@@ -1210,6 +1210,31 @@ def test_etl_job_budget_and_schema_memo(spark, tmp_path):
     assert vdir in wh._schemas
 
 
+#: Spark tasks one pointer-mode run of ``_inputs`` may launch at the
+#: engine's default 32 shuffle partitions.  Recorded when AQE began
+#: sizing persisted plans: 85 on ``local[8]``, the suite's widest session
+#: (local relations split into up to defaultParallelism slices, so
+#: narrower sessions run fewer: 69 on ``local[4]``, where every read of a
+#: cached frame running all 32 of its partitions made it 538).
+ETL_TASK_BUDGET = 85
+
+
+def test_etl_task_budget_at_production_partitions(production_partitions, tmp_path):
+    """Task count is as deterministic as job count, and it shows what
+    the suite's 4 shuffle partitions hide: 32-task reads of KB frames."""
+    spark = production_partitions
+    wh = Warehouse(str(tmp_path / "task_wh"))
+    pipe = EtlPipeline(spark, wh, REGISTRY, io_metrics=False)
+    inputs = _inputs(spark)
+    since = observe.next_job_id(spark)
+    pipe.run(inputs)
+    jobs = observe.jobs(spark, since)
+    tasks = sum(j.tasks for j in jobs)
+    assert tasks <= ETL_TASK_BUDGET, tasks
+    widest = max(jobs, key=lambda j: j.tasks)
+    assert widest.tasks <= spark.sparkContext.defaultParallelism, widest
+
+
 def test_source_to_concept_map_collisions_resolve_in_run_order(spark, wh):
     """Two tables of one level map the same (source code, concept): the
     run's one STCM merge keeps the row of the later table in run order

@@ -44,6 +44,53 @@ def test_read_usagi_csv_subset_of_full_header(spark, tmpdir_):
     assert row["mappingStatus"] == "APPROVED"
 
 
+@pytest.mark.parametrize(
+    "text",
+    [
+        # extra columns
+        "sourceCode,extra,sourceName,mappingStatus,conceptId,conceptName,domainId,more\n"
+        "C1,x,one,APPROVED,42,Concept42,Gender,y\n",
+        # reordered columns
+        "conceptId,domainId,sourceCode,mappingStatus,sourceName,conceptName\n"
+        "42,Gender,C1,APPROVED,one,Concept42\n",
+        # missing columns
+        "sourceCode,conceptId\nC1,42\nC2,\n",
+        # quoted header, quoted values, blank leading line
+        '\n"sourceCode","sourceName","mappingStatus","conceptId"\n'
+        '"C1","one, two","APPROVED","42"\n',
+        # case-insensitive duplicate and empty names
+        "sourceCode,SourceCode,,mappingStatus,conceptId,conceptId\n"
+        "C1,C2,z,APPROVED,42,43\n",
+        # UTF-8 byte-order mark
+        "\ufeffsourceCode,mappingStatus,conceptId\nC1,APPROVED,42\n",
+        # short and long rows
+        "sourceCode,mappingStatus,conceptId\nC1,APPROVED\nC2,APPROVED,42,extra\n",
+        # empty file
+        "",
+    ],
+)
+def test_read_usagi_csv_matches_header_inferring_read(spark, tmpdir_, text):
+    """The driver-parsed header names the columns exactly as Spark's own
+    header read does, so the typed frame is the same."""
+    from pyspark.sql import functions as F
+
+    p = os.path.join(tmpdir_, "usagi.csv")
+    with open(p, "w", encoding="utf-8") as f:
+        f.write(text)
+    raw = spark.read.csv(p, header=True, inferSchema=False)
+    old = raw.select(
+        *[
+            (F.col(fl.name) if fl.name in raw.columns else F.lit(None))
+            .cast(fl.dataType)
+            .alias(fl.name)
+            for fl in USAGI_SCHEMA.fields
+        ]
+    )
+    new = read_usagi_csv(spark, p)
+    assert new.schema == old.schema
+    assert new.collect() == old.collect()
+
+
 def test_read_csv_typed(spark, tmpdir_):
     p = os.path.join(tmpdir_, "t.csv")
     with open(p, "w") as f:

@@ -809,6 +809,72 @@ def test_stream_dsir_select_folds_history_across_batches(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_stream_dsir_select_skips_empty_batch(spark):
+    """An empty micro-batch (a zero-row source file) writes no
+    ``batch=<id>`` score dir and no fold file; the next batch scores and
+    folds as usual."""
+    import os
+
+    from rabbit_in_a_blender_spark.streaming.sink import stream_dsir_select
+
+    schema = "doc_id long, text string"
+    tmp = tempfile.mkdtemp(prefix="riab_sdsir_empty_")
+    try:
+        batches = ([], [(1, "quantum field theory"), (2, "buy cheap pills")])
+        for i, rows in enumerate(batches):
+            spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+                f"{tmp}/in/b{i}"
+            )
+        os.makedirs(f"{tmp}/src")
+        for i in range(len(batches)):
+            (f,) = [
+                f for f in os.listdir(f"{tmp}/in/b{i}") if f.endswith(".parquet")
+            ]
+            dst = f"{tmp}/src/stream_{i}.parquet"
+            os.rename(f"{tmp}/in/b{i}/{f}", dst)
+            os.utime(dst, (1_000_000_000 + i * 1000, 1_000_000_000 + i * 1000))
+        target = spark.createDataFrame([(0, 3), (5, 1)], "bucket long, cnt long")
+        q = (
+            stream_dsir_select(
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", "1")
+                .parquet(f"{tmp}/src"),
+                out_dir=f"{tmp}/out",
+                model_dir=f"{tmp}/model",
+                checkpoint_dir=f"{tmp}/ckpt",
+                target_model=target,
+                num_buckets=16,
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert sorted(os.listdir(f"{tmp}/out")) == ["batch=1"]
+        folds = [f for f in os.listdir(f"{tmp}/model") if f.startswith("inc-")]
+        assert folds == ["inc-batch-00000001.parquet"]
+        assert {r.doc_id for r in spark.read.parquet(f"{tmp}/out").collect()} == {1, 2}
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_fan_out_probe_plans(spark):
+    """The micro-batch probe: a frame of one task's worth of bytes is
+    returned as is; a larger one on too few partitions still fans out to
+    ceil(bytes / 16 KiB) partitions, capped at the default parallelism."""
+    from rabbit_in_a_blender_spark.core.parallelism import fan_out_for_compute
+
+    small = spark.range(0, 10, 1, 1)  # 80 bytes of plan stats
+    assert fan_out_for_compute(small, "id", partition_probe=True) is small
+    big = spark.range(0, 20_000, 1, 1)  # 160 000 bytes: 10 tasks' worth
+    out = fan_out_for_compute(big, "id", partition_probe=True)
+    target = min(spark.sparkContext.defaultParallelism, 10)
+    if target <= 1:
+        assert out is big
+    else:
+        assert out.rdd.getNumPartitions() == target
+        assert sorted(r.id for r in out.collect()) == list(range(20_000))
+
+
 def test_stream_dsir_select_rejects_null_target_counts(spark):
     """A corrupt frozen target model (a NULL cnt row) fails when the
     stream is built, with the model-contract ValueError — not as a bare

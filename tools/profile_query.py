@@ -66,7 +66,7 @@ def main() -> None:
         driver_only = max(wall - union, 0.0)
         print(f"\n=== {name}: wall {wall:.3f}s | plan-build "
               f"{max(t_build - eager, 0.0):.3f}s, eager {eager:.3f}s | "
-              f"{len(jobs)} jobs: critical path {union:.3f}s, job-sum "
+              f"{len(jobs)} jobs, {sum(j.tasks for j in jobs)} tasks: critical path {union:.3f}s, job-sum "
               f"{jsum:.3f}s | driver-only {driver_only:.3f}s ===")
         for j in jobs:
             print(f"  job {j.id:>5}{'*' if j.id < eager_end else ' '}"
