@@ -70,8 +70,7 @@ HEADLINE = [
 ]
 
 # Timed and reported per-round but EXCLUDED from the headline total so
-# r1-r4 totals stay same-set comparable: the bucketed-IO ETL diagnostic
-# (expected slower locally, see its bench-loop note) and the round-5
+# r1-r4 totals stay same-set comparable: the round-5
 # near-dup clustering pipeline (iterative CC — shingle → Jaccard pairs →
 # label propagation; its actions run inside the query function).
 NON_HEADLINE = [
@@ -140,19 +139,13 @@ NON_HEADLINE = [
 def etl_pipeline_bench(
     spark,
     sf_dir: str,
-    io_metrics: bool = False,
-    bucketed: bool = False,
     metrics_out: list | None = None,
 ) -> tuple[float, int]:
     """End-to-end two-stage ETL over customer(person-like) + orders
     (visit-like): prequel keys → usagi mapping → pk swap → fk remap →
     windowed dedup → atomic write.  The analog of the reference's
-    headline 'full ETL throughput' number (README.md:77).
-
-    ``io_metrics`` defaults OFF here (the CLI default is ON): the r4
-    status-store step tally is a diagnostic, and the bench times the
-    production data path — the r5 A/B adjudication of the r4 +15%
-    delta (PLANS.md round-5 notes) is why the flag exists."""
+    headline 'full ETL throughput' number (README.md:77).  Times the
+    pipeline the CLI runs, per-step tally included."""
     import shutil
     import tempfile
 
@@ -214,13 +207,7 @@ def etl_pipeline_bench(
     whdir = tempfile.mkdtemp(prefix="bench_wh_")
     try:
         t0 = time.perf_counter()
-        pipe = EtlPipeline(
-            spark,
-            Warehouse(whdir),
-            registry,
-            io_metrics=io_metrics,
-            bucketed_io=bucketed,
-        )
+        pipe = EtlPipeline(spark, Warehouse(whdir), registry)
         pipe.run(
             {
                 "person": TableInputs(
@@ -235,6 +222,33 @@ def etl_pipeline_bench(
     finally:
         shutil.rmtree(whdir, ignore_errors=True)
     return elapsed, n_rows
+
+
+SESSION_PY = "rabbit_in_a_blender_spark/core/session.py"
+
+
+def session_differs(ref: str) -> bool:
+    """Whether ``core/session.py`` differs between ``ref`` and this
+    tree.  An A/B builds ONE session with this tree's ``get_spark`` and
+    runs both trees in it, so a change to a session default reads 1.0
+    by construction; when the file differs a warning goes to stderr."""
+    import subprocess
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    differs = (
+        subprocess.run(
+            ["git", "diff", "--quiet", ref, "--", SESSION_PY],
+            cwd=here, capture_output=True, timeout=30,
+        ).returncode
+        != 0
+    )
+    if differs:
+        print(
+            f"warning: {SESSION_PY} differs from {ref}; the A/B runs both "
+            "trees in this tree's session, so session defaults are not compared",
+            file=sys.stderr,
+        )
+    return differs
 
 
 def _purge_pkg_modules() -> None:
@@ -305,6 +319,7 @@ def ab_main(ref: str, only: list[str] | None, rounds: int) -> None:
         subprocess.run(
             ["tar", "-x", "-C", refdir], input=tar.stdout, check=True, timeout=120
         )
+        differs = session_differs(ref)
         spark = get_spark("bench-ab")
         spark.sparkContext.setLogLevel("ERROR")
         spark.range(1000).count()
@@ -347,6 +362,7 @@ def ab_main(ref: str, only: list[str] | None, rounds: int) -> None:
                     "queries": per_query,
                     "skipped_not_in_ref": missing,
                     "sf_dir": sf_dir,
+                    "session_differs": differs,
                 }
             )
         )
@@ -494,37 +510,23 @@ def main() -> None:
     # once here, so the timed run below measures steady-state execution
     # (same treatment the headline queries get above).
     etl_pipeline_bench(spark, "/root/testdata/sf0.001")
-    etl_pipeline_bench(spark, "/root/testdata/sf0.001", bucketed=True)
-    etl_rows = 0
-    for key, bucketed in (
-        ("etl_pipeline_two_stage", False),
-        # The cluster-I/O path (bucketed swap/upload tables → exchange-
-        # free pk-swap join) is expected SLOWER here: at local test
-        # scale the saveAsTable catalog round-trips cost more than the
-        # one exchange they remove (PLANS.md round-5 adjudication) —
-        # recorded so the gap is tracked, not hidden.
-        ("etl_pipeline_bucketed", True),
-    ):
-        etl_samples: list[float] = []
-        for _ in range(reps):
-            etl_sec, etl_rows = etl_pipeline_bench(spark, sf_dir, bucketed=bucketed)
-            etl_samples.append(round(etl_sec, 3))
-        etl_med = sorted(etl_samples)[len(etl_samples) // 2]
-        timings[key] = etl_med
-        queries_reps[key] = etl_samples
-        spread_pct[key] = round(
-            100.0 * (max(etl_samples) - min(etl_samples)) / etl_med, 1
-        )
-    etl_med = timings["etl_pipeline_two_stage"]
+    etl_samples: list[float] = []
+    for _ in range(reps):
+        etl_sec, etl_rows = etl_pipeline_bench(spark, sf_dir)
+        etl_samples.append(round(etl_sec, 3))
+    etl_med = sorted(etl_samples)[len(etl_samples) // 2]
+    timings["etl_pipeline_two_stage"] = etl_med
+    queries_reps["etl_pipeline_two_stage"] = etl_samples
+    spread_pct["etl_pipeline_two_stage"] = round(
+        100.0 * (max(etl_samples) - min(etl_samples)) / etl_med, 1
+    )
 
     # The sweep's wall-time moves with its coverage (r3: +45% wall,
     # -20% per-check as checks grew 53 -> 96); dq_checks (recorded during
     # warmup above) keeps coverage growth and regression separable
-    # (VERDICT r3 task 5).  The bucketed-ETL diagnostic stays out of the
-    # headline total so r1-r4 totals remain same-set comparable.
-    excluded = set(NON_HEADLINE) | {"etl_pipeline_bucketed"}
+    # (VERDICT r3 task 5).
     total = round(
-        sum(v for k, v in timings.items() if k not in excluded), 3
+        sum(v for k, v in timings.items() if k not in NON_HEADLINE), 3
     )
     # Verbose variance detail first, on its own line — the driver's tail
     # capture only needs the compact LAST line below.
@@ -619,7 +621,6 @@ def main() -> None:
             "ref": etl_ab.get("ref"),
             "rounds": etl_ab.get("rounds"),
             "two_stage_ratio": etl_ab.get("two_stage", {}).get("ratio"),
-            "bucketed_ratio": etl_ab.get("bucketed", {}).get("ratio"),
             "recorded_artifact": etl_ab.get("recorded_artifact"),
         }
     print(json.dumps(record))

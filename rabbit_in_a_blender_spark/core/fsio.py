@@ -10,7 +10,7 @@ streaming sinks and the CLI import this module.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 def parquet_exists(spark: SparkSession, path: str) -> bool:
@@ -27,18 +27,6 @@ def parquet_exists(spark: SparkSession, path: str) -> bool:
         return True
     except AnalysisException:
         return False
-
-
-def atomic_overwrite(df: DataFrame, path: str) -> None:
-    """Atomic-rebuild sink: the reference's CREATE OR REPLACE TABLE ... AS
-    (SURVEY §2 A7; bq:etl/{omop_table}_merge.sql.jinja:3-12) re-expressed.
-
-    Parquet overwrite in Spark stages to _temporary and commits via rename,
-    which is atomic per-directory on HDFS-like filesystems. For
-    object-store deployments swap in Delta and ``mode("overwrite")`` on a
-    table; the call-site contract (all-or-nothing replace) is identical.
-    """
-    df.write.mode("overwrite").parquet(path)
 
 
 def _walk_parquet(p: str) -> list[str]:

@@ -69,6 +69,6 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
         df.createOrReplaceTempView(name)
 
 
-# parquet_exists / atomic_overwrite moved to core/fsio.py (VERDICT r7
+# parquet_exists moved to core/fsio.py (VERDICT r7
 # task 4): this module is in every query's import closure, so helpers
 # that only the sinks/CLI touch must not live here.

@@ -25,6 +25,8 @@ deterministic under task retry (guide §2.5 / SPARK-38388).
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -82,36 +84,26 @@ def fan_out_for_compute(
     is ``ceil(bytes / _PROBE_BYTES_PER_TASK)`` capped at the default
     parallelism, so a trickle batch no longer pays an unconditional
     |cores|-way exchange.  Unknown stats fall back to the full target
-    (pre-r14 behavior)."""
+    (pre-r14 behavior).
+
+    A streaming frame is returned as is: it plans only under
+    ``writeStream``, so its file listing raises ``AnalysisException``
+    (the probe's stats and partition reads would raise the same way)."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     try:
         files = df.inputFiles()
-    except Exception:
+    except AnalysisException:
         return df
     if not files and partition_probe:
-        size = None
-        try:
-            jsize = (
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-            # py4j hands the Scala BigInt back as a Python int
-            size = int(str(jsize))
-            if size >= _UNKNOWN_STATS_BYTES:
-                size = None
-        except Exception:
-            size = None
-        if size is not None:
+        # py4j hands the Scala BigInt back as a Python int
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        if size < _UNKNOWN_STATS_BYTES:
             if size >= target * _FAN_OUT_BYTES_PER_CORE:
                 return df  # same refusal as the file-metadata path
             target = min(target, max(1, -(-size // _PROBE_BYTES_PER_TASK)))
-        if target <= 1:
-            return df  # one task's worth: nothing to fan out to
-        try:
-            if df.rdd.getNumPartitions() >= target:
-                return df
-        except Exception:
-            return df
+        if target <= 1 or df.rdd.getNumPartitions() >= target:
+            return df  # one task's worth, or already wide enough
         if key_cols:
             return df.repartition(target, *[F.col(c) for c in key_cols])
         return df.repartition(target)
@@ -119,16 +111,20 @@ def fan_out_for_compute(
         return df
     budget = target * _FAN_OUT_BYTES_PER_CORE
     total = 0
+    jvm = sc._jvm
+    hconf = sc._jsc.hadoopConfiguration()
     try:
-        jvm = sc._jvm
-        hconf = sc._jsc.hadoopConfiguration()
         for f in files:
-            p = jvm.org.apache.hadoop.fs.Path(f)
+            # inputFiles() lists percent-encoded URIs: parse them as URIs,
+            # or a path with a space reads as missing
+            p = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f))
             fs = p.getFileSystem(hconf)
             total += int(fs.getFileStatus(p).getLen())
             if total >= budget:
                 return df
-    except Exception:
+    except Py4JJavaError:
+        # a file listed when the frame was planned is gone
+        # (FileNotFoundException): its scan fails on its own
         return df
     if key_cols:
         return df.repartition(target, *[F.col(c) for c in key_cols])

@@ -54,11 +54,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Swap-table joins bucket both sides on the near-unique source key
-        # x, but their null-safe identity conditions expand to extra
-        # coalesce()/isnull() join keys; allow subset co-partitioning so
-        # the bucketed scans satisfy the join's distribution without a
-        # shuffle (skew risk nil — x is near-unique by construction).
+        # Subset co-partitioning: a multi-key join whose two inputs are
+        # already hash-partitioned on the same subset of its keys keeps
+        # that partitioning instead of re-shuffling both sides.  Kept
+        # unmeasured: changing a session default moves the plan of every
+        # multi-key join, and ``bench.py --ab`` runs both trees in one
+        # session, so it needs its own measured change.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

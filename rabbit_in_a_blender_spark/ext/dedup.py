@@ -241,8 +241,7 @@ def signature_bands(
     '|'-joined band slice of the signature), exposed standalone so the
     index can be PERSISTED between runs: a continuous-crawl pipeline
     materializes this once per corpus snapshot and only the daily delta
-    recomputes signatures.  Store bucketed by ``band_hash`` so the
-    incremental probe join co-locates without a corpus-side shuffle.
+    recomputes signatures.
     """
     rows_per_band = num_hashes // bands
     band_cols = []
@@ -292,9 +291,8 @@ def incremental_dedup(
       appended to the index for the next increment.
 
     Scale: only the delta is shingled and hashed; the corpus side is a
-    pre-banded table probed with a semi join on (band_idx, band_hash) —
-    bucketed storage makes that a co-located join with no corpus-side
-    shuffle, so cost per increment is O(delta), not O(corpus).
+    pre-banded table probed with a semi join on (band_idx, band_hash),
+    which still scans the stored index.
 
     The increment persists small intermediates (the delta's band rows);
     in a continuous-crawl loop call

@@ -496,11 +496,11 @@ def incremental_semantic_dedup(
     ``unpersist_intermediates(flags, kept_index_rows)`` per increment.
 
     Scale: only the delta is assigned and compared; the index side is
-    probed with a cluster-local join — store it bucketed/partitioned by
-    centroid_id and the probe co-locates with no index-side shuffle, so
-    cost per increment is O(delta x cluster density), not O(corpus)
-    (``pipeline/warehouse.py::save_bucketed_index`` writes it that way
-    and ``load_bucketed_index`` reads it back bucket-aware).
+    probed with an equi-join on centroid_id, so the comparisons per
+    increment are O(delta x cluster density), not O(corpus).  The join
+    still scans the stored index (and shuffles it unless it is small
+    enough to broadcast); keep it as a plain table, e.g. one
+    ``Warehouse.append`` per increment.
 
     ``max_cluster_size`` guards the INTRA-batch self-join like the
     batch operator (see :func:`_subsplit_hot`); the index-probe join is

@@ -23,7 +23,7 @@ import logging
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager, nullcontext
+from contextlib import contextmanager
 from dataclasses import dataclass, field, fields
 from functools import reduce
 
@@ -102,11 +102,7 @@ class EtlPipeline:
         spark: SparkSession,
         warehouse: Warehouse,
         registry: SchemaRegistry,
-        inline_checks: bool = True,
-        bucketed_io: bool = False,
-        buckets: int = 32,
         process_semi_approved_mappings: bool = True,
-        io_metrics: bool = True,
         skip_usagi_and_custom_concept_upload: bool = False,
         skip_event_fks_step: bool = False,
     ):
@@ -130,32 +126,14 @@ class EtlPipeline:
         # event-tables map the apply template renders every event FK and
         # its discriminator as NULL.
         self.skip_event_fks = skip_event_fks_step
-        # Cluster-scale path: materialized uploads and swap tables are
-        # written bucketed on the source key, so the pk-swap join (the
-        # one fact-fact join in the pipeline) reads two co-partitioned
-        # scans and needs NO exchange (see Warehouse.write_bucketed and
-        # the requireAllClusterKeysForCoPartition note in core.session).
-        # Off by default: at test scale the catalog round-trips cost more
-        # than the shuffle they remove; on a 1000-executor cluster the
-        # shuffle is the bottleneck. Set buckets ~ 2-3x total cores.
-        self.bucketed_io = bucketed_io
-        self.buckets = buckets
-        # Inline checks: the usagi concept checks cost extra joins per
-        # mapped column, the duplicate-row warning an observed flag
-        # column on the final write; SURVEY §7 rule 8: keep them behind
-        # a flag so 100 TB runs can skip what the reference always pays.
-        self.inline_checks = inline_checks
         # Per-step wall-clock + rows/bytes tally — the Spark analog of
         # the reference's per-query cost/time accounting
         # (etl/bigquery/gcp.py:106-144, totals at exit etl_base.py:65-67).
         # I/O numbers are attached after run() from Spark's status store
         # (core.observe) via per-step job groups, set on every thread
         # that works for a step: the level fan-out and the prefetch and
-        # bookkeeping pool threads (_submit).  ``io_metrics=False`` skips
-        # job-group tagging and the post-run status-store read (wall-clock
-        # is still recorded) — benchmarks use it so the diagnostic tally
-        # never taints the timed path (r4 bench adjudication).
-        self.io_metrics = io_metrics
+        # bookkeeping pool threads (_submit).  Always on: tagging and
+        # the one post-run status-store read schedule no Spark job.
         self.metrics: list[StepMetric] = []
         # Shared-table writes (source_to_concept_map, concept swap,
         # omop.concept) must serialize when tables run concurrently —
@@ -170,8 +148,6 @@ class EtlPipeline:
     def _tagged(self, name: str):
         """Job group of step ``name``: the end of :meth:`run` adds the
         I/O of the jobs launched inside it to the step's metric."""
-        if not self.io_metrics:
-            return nullcontext()
         return observe.job_group(self.spark, f"riab:{name}")
 
     @contextmanager
@@ -206,8 +182,6 @@ class EtlPipeline:
         non-standard concepts; raise when a mapped concept's domain is
         outside the column's allowed set.  Both need omop.concept — a
         no-op until a vocabulary is loaded."""
-        if not self.inline_checks:
-            return
         # Read AND consume omop.concept under the shared lock: sibling
         # FK-level threads commit new versions of that table, and each
         # commit prunes versions beyond retention — an unlocked reader
@@ -267,17 +241,12 @@ class EtlPipeline:
 
     def _load_swap(self, table: str) -> DataFrame | None:
         name = self._swap_name(table)
-        if self.bucketed_io and self.wh.exists_bucketed(self.spark, "work", name):
-            return self.wh.read_bucketed(self.spark, "work", name)
         if self.wh.exists("work", name):
             return self.wh.read(self.spark, "work", name)
         return None
 
-    def _write_keyed(self, df: DataFrame, name: str, key: str | None) -> DataFrame:
-        """Materialize a work table, bucketed on ``key`` in cluster mode."""
-        if self.bucketed_io and key is not None:
-            self.wh.write_bucketed(df, "work", name, [key], buckets=self.buckets)
-            return self.wh.read_bucketed(self.spark, "work", name)
+    def _write_keyed(self, df: DataFrame, name: str) -> DataFrame:
+        """Materialize a work table and read it back."""
         self.wh.write(df, "work", name)
         return self.wh.read(self.spark, "work", name)
 
@@ -431,7 +400,7 @@ class EtlPipeline:
                 semi=self.semi,
             )
 
-        upload = self._write_keyed(upload, f"{spec.name}__upload", spec.pk)
+        upload = self._write_keyed(upload, f"{spec.name}__upload")
         return upload, fatal, bookkeeping
 
     def run_table(
@@ -470,13 +439,11 @@ class EtlPipeline:
                     concept_cols=spec.concept_cols,
                     event_cols=event_cols,
                 )
-                if self.bucketed_io or prior is not None:
-                    # cluster path: read back the bucketed table so the
-                    # pk-swap join sees co-partitioned scans (no exchange).
-                    # Re-run path: the swap lineage scans the PRIOR swap
+                if prior is not None:
+                    # re-run path: the swap lineage scans the PRIOR swap
                     # parquet, which the write below replaces — write
                     # first, read back, so consumers see the new files.
-                    swap = self._write_keyed(swap, swap_name, "x")
+                    swap = self._write_keyed(swap, swap_name)
                 else:
                     # first-run plain path: the swap lineage is pinned by
                     # the persist inside assign_ids (and reads no prior
@@ -487,7 +454,7 @@ class EtlPipeline:
                     # instead of serializing before it.
                     bookkeeping.append(
                         self._submit(
-                            pool, spec.name, self._write_keyed, swap, swap_name, "x"
+                            pool, spec.name, self._write_keyed, swap, swap_name
                         )
                     )
                 own_swap = swap
@@ -526,7 +493,7 @@ class EtlPipeline:
             # bq:etl/{omop_work_table}_merge_check_for_duplicate_rows:3-63)
             # is logging-only: a flag on each kept row whose group had a
             # second row, counted by an Observation on the final write.
-            flag = "__dup" if spec.pk and self.inline_checks else None
+            flag = "__dup" if spec.pk else None
             if spec.pk:
                 keys = [spec.pk, *spec.concept_cols, *spec.event_cols]
                 upload = dedup_keep_first(upload, keys, dup_flag=flag)
@@ -840,7 +807,7 @@ class EtlPipeline:
         # the STCM merge records THIS run's mappings only
         self._stcm_queue = []
         first_metric = len(self.metrics)
-        since = observe.next_job_id(self.spark) if self.io_metrics else 0
+        since = observe.next_job_id(self.spark)
 
         with ThreadPoolExecutor(max(4, 2 * max_parallel_tables)) as pool:
 
@@ -903,8 +870,7 @@ class EtlPipeline:
 
             txn = self.wh.begin()
             for t in self.wh.list_tables("omop"):
-                # bucketed (catalog-managed) tables and legacy plain
-                # dirs have no version dirs to pin — skip them
+                # legacy plain dirs have no version dirs to pin
                 if is_pointer_table(self.wh.path("omop", t)):
                     txn.include("omop", t)
             txn.commit()
@@ -912,18 +878,17 @@ class EtlPipeline:
         # step's group, pool-thread jobs included (_submit).  The tally
         # is a diagnostic — a status store that cannot be read leaves
         # the I/O fields at 0 with a warning, and the run stands.
-        if self.io_metrics:
-            try:
-                jobs = observe.jobs(self.spark, since)
-            except (Py4JError, json.JSONDecodeError):
-                log.warning("ETL run: status-store I/O unavailable", exc_info=True)
-                jobs = []
-            steps = {f"riab:{m.name}": m for m in self.metrics[first_metric:]}
-            for j in jobs:
-                if j.group in steps:
-                    m = steps[j.group]
-                    for k in IO_FIELDS:
-                        setattr(m, k, getattr(m, k) + getattr(j, k))
+        try:
+            jobs = observe.jobs(self.spark, since)
+        except (Py4JError, json.JSONDecodeError):
+            log.warning("ETL run: status-store I/O unavailable", exc_info=True)
+            jobs = []
+        steps = {f"riab:{m.name}": m for m in self.metrics[first_metric:]}
+        for j in jobs:
+            if j.group in steps:
+                m = steps[j.group]
+                for k in IO_FIELDS:
+                    setattr(m, k, getattr(m, k) + getattr(j, k))
         total = round(sum(s for _, s in self.metrics), 3)
         log.info("ETL run: %.3fs total; steps: %s", total, self.metrics)
         return processed

@@ -11,8 +11,6 @@ replaced ``_POINTER`` file — object-store safe.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -385,140 +383,6 @@ class Warehouse:
         else:
             raise ValueError(f"unknown write disposition: {disposition!r}")
 
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        zone: str,
-        table: str,
-        keys: list[str],
-        buckets: int = 32,
-        sorted_within: bool = True,
-    ) -> None:
-        """Bucketed, catalog-managed write — the co-located-join path.
-
-        The BigQuery `CLUSTER BY` analog (bq:ddl/
-        OMOPCDM_bigquery_5.4_clustering_fields.json): two tables bucketed
-        on the same keys with the same bucket count join/aggregate on
-        those keys WITHOUT a shuffle (bucketed scan provides the
-        partitioning; sortBy provides the sort for SMJ).  At 100 TB this
-        removes the dominant exchange from every fact-fact join in the
-        pipeline.  Requires saveAsTable (bucket metadata lives in the
-        catalog, session-local derby here, HMS/Glue on a cluster).
-
-        Replacement is a catalog swap, not a pointer commit: the new data
-        lands in a fresh location under a staging table name, then the
-        catalog entry is renamed over the old one and the old files
-        removed — so a plan may lazily read the table being replaced
-        (swap-table extension on re-runs).
-        """
-        if self._uri:
-            raise NotImplementedError(
-                "bucketed tables need a real catalog service (bucket "
-                "metadata lives in the metastore); on a URI-rooted "
-                "warehouse configure HMS/Glue and saveAsTable there — "
-                "the session-local derby catalog only manages local "
-                "paths"
-            )
-        spark = df.sparkSession
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {zone}")
-        full = f"{zone}.{table}"
-        old_location = self._bucketed_location(spark, zone, table)
-        stg_location = self.path(zone, table) + f"__bucketed__{uuid.uuid4().hex[:8]}"
-        stg_table = f"{full}__stg"
-        spark.sql(f"DROP TABLE IF EXISTS {stg_table}")
-        w = df.write.bucketBy(buckets, *keys)
-        if sorted_within:
-            w = w.sortBy(*keys)
-        (
-            w.mode("overwrite")
-            .format("parquet")
-            .option("path", stg_location)
-            .saveAsTable(stg_table)
-        )
-        spark.sql(f"DROP TABLE IF EXISTS {full}")
-        spark.sql(f"ALTER TABLE {stg_table} RENAME TO {full}")
-        if old_location and os.path.isdir(old_location):
-            shutil.rmtree(old_location, ignore_errors=True)
-
-    def save_bucketed_index(
-        self,
-        index: DataFrame,
-        zone: str,
-        table: str,
-        key: str = "centroid_id",
-        buckets: int = 32,
-    ) -> None:
-        """Persist an incremental-dedup exemplar/band index CO-LOCATED
-        on its probe key (VERDICT r9 task 4): the continuous-crawl
-        screens (``ext/semdedup.py::incremental_semantic_dedup``,
-        ``ext/dedup.py::incremental_dedup``) probe the stored index with
-        a cluster-/bucket-local join every increment, and a plain
-        parquet index re-shuffles its ENTIRE (corpus-sized) side each
-        time.  Bucketed on the probe key, the scan itself provides the
-        join partitioning — only the (delta-sized) batch side exchanges
-        (pytest-pinned plan shape).
-
-        ``key='centroid_id'`` for the SemDeDup exemplar index,
-        ``key='band_hash'`` for the MinHash band index.  Read back with
-        :meth:`load_bucketed_index` — a raw ``spark.read.parquet`` of
-        the files would drop the bucket metadata and the plan benefit.
-        """
-        if key not in index.columns:
-            raise ValueError(
-                f"bucket key {key!r} not in index columns {index.columns}"
-            )
-        self.write_bucketed(index, zone, table, [key], buckets=buckets)
-
-    def load_bucketed_index(
-        self, spark: SparkSession, zone: str, table: str
-    ) -> DataFrame:
-        """Bucket-aware read of a :meth:`save_bucketed_index` table —
-        feed this straight into the incremental screen's ``index``
-        argument."""
-        return self.read_bucketed(spark, zone, table)
-
-    def _describe_location(
-        self, spark: SparkSession, zone: str, table: str
-    ) -> str | None:
-        rows = spark.sql(f"DESCRIBE FORMATTED {zone}.{table}").collect()
-        for r in rows:
-            if r.col_name == "Location":
-                loc = r.data_type
-                if loc.startswith("file:"):
-                    # DESCRIBE returns 'file:/path' (single slash) — parse
-                    # as a URI; a fixed [7:] strip mangles it into a
-                    # relative path and the old files never get removed.
-                    from urllib.parse import urlparse
-
-                    return urlparse(loc).path
-                return loc
-        return None
-
-    def _bucketed_location(
-        self, spark: SparkSession, zone: str, table: str
-    ) -> str | None:
-        if not self.exists_bucketed(spark, zone, table):
-            return None
-        return self._describe_location(spark, zone, table)
-
-    def exists_bucketed(self, spark: SparkSession, zone: str, table: str) -> bool:
-        """True when the catalog has ``zone.table`` AND its location is
-        under THIS warehouse's root.  The Spark catalog is session-global
-        while Warehouse roots are not: a table registered by a previous
-        Warehouse (e.g. an earlier bench/test run whose temp root was
-        deleted) would otherwise read as an existing prior table with
-        dangling files — a phantom swap on the re-run path."""
-        if not spark.catalog.tableExists(f"{zone}.{table}"):
-            return False
-        loc = self._describe_location(spark, zone, table)
-        if loc is None:
-            return True
-        root = os.path.realpath(self.root)
-        return os.path.realpath(loc).startswith(root + os.sep)
-
-    def read_bucketed(self, spark: SparkSession, zone: str, table: str) -> DataFrame:
-        return spark.table(f"{zone}.{table}")
-
     # ---- multi-table transactions (pipeline/txn.py) -------------------
     #
     # One atomic manifest publish covers every table an ETL run writes:
@@ -742,5 +606,5 @@ class SnapshotWarehouse:
             "through the live Warehouse"
         )
 
-    write = append = load = write_versioned = write_bucketed = _readonly
+    write = append = load = write_versioned = _readonly
     drop = compact = restore_version = vacuum = _readonly

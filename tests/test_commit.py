@@ -486,9 +486,6 @@ def test_warehouse_uri_root_pointer_mode_end_to_end(spark, tmp_path):
     wh.drop("work", "t")
     assert wh.list_tables("work") == ["other"]
     assert not wh.exists("work", "t")
-    # bucketed writes need a real metastore on URI roots
-    with pytest.raises(NotImplementedError, match="catalog service"):
-        wh.write_bucketed(_rows(spark, 0, 5), "work", "b", ["id"])
 
 
 def test_compact_parquet_dir_uri_pointer_table(spark, tmp_path):
@@ -613,3 +610,24 @@ pointer_commit(slow_write, {t!r})
     assert not os.path.exists(
         os.path.join(t, "v-000002", "partial.bin")
     )  # orphan contents swept before restage
+
+
+def test_every_warehouse_table_is_a_pointer_table():
+    """Source scan, no Spark: the package, ``bench.py`` and ``tools/``
+    write no catalog-managed or bucketed table, so every table is a
+    pointer table (``core/commit.py``)."""
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    pattern = re.compile(r"saveAsTable\(|\.bucketBy\(")
+    paths = [root / "bench.py"]
+    for d in ("rabbit_in_a_blender_spark", "tools"):
+        paths += sorted((root / d).rglob("*.py"))
+    offenders = [
+        f"{path.relative_to(root)}:{n}: {line.strip()}"
+        for path in paths
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert offenders == []

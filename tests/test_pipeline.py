@@ -253,46 +253,6 @@ def test_cleanup_walks_fk_dependency_levels(spark, wh):
     assert wh.exists("omop", "person")
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Co-located join: same keys + same bucket count → zero exchanges."""
-    from rabbit_in_a_blender_spark.operators.skew import explain_shuffle_count
-    from rabbit_in_a_blender_spark.pipeline.warehouse import Warehouse
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    orders = spark.range(0, 1000).select(
-        F.col("id").alias("o_orderkey"), (F.col("id") % 7).alias("o_flag")
-    )
-    lines = spark.range(0, 4000).select(
-        (F.col("id") % 1000).alias("l_orderkey"), F.col("id").alias("l_line")
-    )
-    wh.write_bucketed(orders, "work", "orders_b", ["o_orderkey"], buckets=4)
-    wh.write_bucketed(lines, "work", "lineitem_b", ["l_orderkey"], buckets=4)
-
-    o = wh.read_bucketed(spark, "work", "orders_b")
-    li = wh.read_bucketed(spark, "work", "lineitem_b")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    old_aqe = spark.conf.get(
-        "spark.sql.adaptive.autoBroadcastJoinThreshold", old
-    )
-    try:
-        # force the non-broadcast plan: this is the big-big join shape
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        j = o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        assert explain_shuffle_count(j) == 0, j._jdf.queryExecution().executedPlan().toString()
-        assert j.count() == 4000
-        # control: the same join on plain (non-bucketed) reads shuffles
-        o2 = orders
-        l2 = lines
-        j2 = o2.join(l2, F.col("o_orderkey") == F.col("l_orderkey"))
-        assert explain_shuffle_count(j2) >= 1
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
-        spark.sql("DROP TABLE IF EXISTS work.orders_b")
-        spark.sql("DROP TABLE IF EXISTS work.lineitem_b")
-
-
 def test_source_id_to_omop_id_map(spark, wh):
     """The consolidated audit map records every swap assignment and
     survives re-runs without renumbering; cleanup removes one table."""
@@ -595,68 +555,6 @@ def test_usagi_collapse_is_capped(spark, wh, monkeypatch, caplog, n_rows, collap
     person = {r["name"]: r["gender_concept_id"] for r in wh.read(spark, "omop", "person").collect()}
     assert person["alice"] == 8507 and person["bob"] == 8532
 
-
-def test_bucketed_io_pipeline_matches_plain_and_is_stable(spark, wh):
-    """bucketed_io=True (the cluster path) must produce exactly the same
-    tables as the plain path, stay id-stable across re-runs, and give the
-    pk-swap join co-partitioned inputs (no exchange on either side)."""
-    from rabbit_in_a_blender_spark.mapping.swap import apply_pk_swap
-    from rabbit_in_a_blender_spark.operators.skew import explain_shuffle_count
-
-    plain = EtlPipeline(spark, wh, REGISTRY)
-    plain.run(_inputs(spark))
-    expected = {
-        t: sorted(map(str, wh.read(spark, "omop", t).collect()))
-        for t in ("person", "visit", "note")
-    }
-
-    d = tempfile.mkdtemp(prefix="riab_wh_bkt_")
-    try:
-        bwh = Warehouse(d)
-        pipe = EtlPipeline(spark, bwh, REGISTRY, bucketed_io=True, buckets=4)
-        pipe.run(_inputs(spark))
-        for t, exp in expected.items():
-            got = sorted(map(str, bwh.read(spark, "omop", t).collect()))
-            assert got == exp, t
-
-        # swap + upload live in the catalog, bucketed on the source key
-        assert bwh.exists_bucketed(spark, "work", "person__pk_swap")
-        assert bwh.exists_bucketed(spark, "work", "person__upload")
-
-        # re-run: staged catalog replacement, ids must not renumber
-        first = {
-            (r["name"], r["gender_concept_id"]): r["person_id"]
-            for r in bwh.read(spark, "omop", "person").collect()
-        }
-        pipe.run(_inputs(spark))
-        second = {
-            (r["name"], r["gender_concept_id"]): r["person_id"]
-            for r in bwh.read(spark, "omop", "person").collect()
-        }
-        assert first == second
-
-        # the signature plan property: pk-swap join without exchanges
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        old_aqe = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", old)
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-            up = bwh.read_bucketed(spark, "work", "person__upload").withColumnRenamed(
-                "person_id", "x"
-            )
-            sw = bwh.read_bucketed(spark, "work", "person__pk_swap")
-            j = apply_pk_swap(up, sw, key_col="x", concept_cols=["gender_concept_id"])
-            assert explain_shuffle_count(j) == 0, (
-                j._jdf.queryExecution().executedPlan().toString()
-            )
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
-    finally:
-        for t in ("person__pk_swap", "person__upload", "visit__pk_swap",
-                  "visit__upload", "note__pk_swap", "note__upload"):
-            spark.sql(f"DROP TABLE IF EXISTS work.{t}")
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def test_visit_detail_episode_cdm54(spark, wh):
@@ -1180,7 +1078,7 @@ def test_etl_job_budget_and_schema_memo(spark, tmp_path):
     from rabbit_in_a_blender_spark.core.commit import POINTER, resolve_pointer
 
     wh = Warehouse(str(tmp_path / "budget_wh"))
-    pipe = EtlPipeline(spark, wh, REGISTRY, io_metrics=False)
+    pipe = EtlPipeline(spark, wh, REGISTRY)
     inputs = _inputs(spark)
     since = observe.next_job_id(spark)
     pipe.run(inputs)
@@ -1224,7 +1122,7 @@ def test_etl_task_budget_at_production_partitions(production_partitions, tmp_pat
     the suite's 4 shuffle partitions hide: 32-task reads of KB frames."""
     spark = production_partitions
     wh = Warehouse(str(tmp_path / "task_wh"))
-    pipe = EtlPipeline(spark, wh, REGISTRY, io_metrics=False)
+    pipe = EtlPipeline(spark, wh, REGISTRY)
     inputs = _inputs(spark)
     since = observe.next_job_id(spark)
     pipe.run(inputs)

@@ -1,13 +1,15 @@
-"""Pinned-tree interleaved A/B for the ETL pipeline bench rows.
+"""Pinned-tree interleaved A/B for the ETL pipeline bench row.
 
-The bench's ``--ab`` mode covers catalog queries only; the two ETL rows
-(etl_pipeline_two_stage / _bucketed) are timed by ``bench.py`` through
+The bench's ``--ab`` mode covers catalog queries only; the ETL row
+(etl_pipeline_two_stage) is timed by ``bench.py`` through
 ``etl_pipeline_bench``, so adjudicating an ETL change needs its own
 interleave.  This is the recording protocol behind ETL_AB_r13.json
 (VERDICT r12 task 5), committed as a tool in r14 so the session is
 reproducible: the ref tree (``git archive <ref>``) and HEAD alternate
-full (two_stage, bucketed) passes in ONE Spark session and the RATIO is
-reported — ambient host drift hits both sides equally.
+passes in ONE Spark session and the RATIO is reported — ambient host
+drift hits both sides equally.  That one session is HEAD's, so the
+record's ``session_differs`` says whether a session-default change
+went unmeasured (``bench.session_differs``).
 
 Usage: python tools/etl_ab.py <git-ref> [rounds]
 Writes the JSON record to stdout (one line, last).
@@ -26,6 +28,7 @@ import tempfile
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
+from bench import session_differs  # noqa: E402
 from rabbit_in_a_blender_spark.core.session import get_spark  # noqa: E402
 
 
@@ -46,17 +49,12 @@ def _bench_module(root: str):
     return mod
 
 
-def _run_tree(root: str, spark, sf_dir: str) -> dict[str, float]:
+def _run_tree(root: str, spark, sf_dir: str) -> float:
     _purge_pkg_modules()
     sys.path.insert(0, root)
     try:
-        b = _bench_module(root)
-        out = {}
-        sec, _ = b.etl_pipeline_bench(spark, sf_dir)
-        out["two_stage"] = round(sec, 3)
-        sec, _ = b.etl_pipeline_bench(spark, sf_dir, bucketed=True)
-        out["bucketed"] = round(sec, 3)
-        return out
+        sec, _ = _bench_module(root).etl_pipeline_bench(spark, sf_dir)
+        return round(sec, 3)
     finally:
         sys.path.remove(root)
         _purge_pkg_modules()
@@ -76,27 +74,28 @@ def main() -> None:
         subprocess.run(
             ["tar", "-x", "-C", refdir], input=tar.stdout, check=True, timeout=120
         )
+        differs = session_differs(ref)
         spark = get_spark("etl-ab")
         spark.sparkContext.setLogLevel("ERROR")
         # one untimed warmup pass per tree (codegen + committer paths)
         _run_tree(refdir, spark, "/root/testdata/sf0.001")
         _run_tree(HERE, spark, "/root/testdata/sf0.001")
-        reps = {"ref": {"two_stage": [], "bucketed": []},
-                "head": {"two_stage": [], "bucketed": []}}
+        reps = {"ref": [], "head": []}
         for _ in range(rounds):
             for side, root in (("ref", refdir), ("head", HERE)):
-                r = _run_tree(root, spark, sf_dir)
-                for k, v in r.items():
-                    reps[side][k].append(v)
+                reps[side].append(_run_tree(root, spark, sf_dir))
         med = lambda xs: sorted(xs)[len(xs) // 2]
-        rec = {"metric": "etl_ab_head_over_ref", "ref": ref[:9],
-               "rounds": rounds, "sf_dir": sf_dir}
-        for k in ("two_stage", "bucketed"):
-            rec[k] = {
-                "ref": reps["ref"][k],
-                "head": reps["head"][k],
-                "ratio": round(med(reps["head"][k]) / med(reps["ref"][k]), 3),
-            }
+        rec = {
+            "metric": "etl_ab_head_over_ref",
+            "ref": ref[:9],
+            "rounds": rounds,
+            "sf_dir": sf_dir,
+            "session_differs": differs,
+            "two_stage": {
+                **reps,
+                "ratio": round(med(reps["head"]) / med(reps["ref"]), 3),
+            },
+        }
         print(json.dumps(rec))
     finally:
         shutil.rmtree(refdir, ignore_errors=True)

@@ -1,5 +1,5 @@
 """Per-job profile of bench rows: catalog queries and the bench-only
-ETL rows (``etl_pipeline_two_stage``, ``etl_pipeline_bucketed``).
+ETL row (``etl_pipeline_two_stage``).
 
 Usage: python tools/profile_query.py q1_pricing_summary etl_pipeline_two_stage ...
 
@@ -17,7 +17,6 @@ from __future__ import annotations
 import os
 import sys
 import time
-from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -25,10 +24,7 @@ import bench
 from rabbit_in_a_blender_spark.core import observe
 from rabbit_in_a_blender_spark.core.session import get_spark
 
-BENCH_ROWS = {
-    "etl_pipeline_two_stage": bench.etl_pipeline_bench,
-    "etl_pipeline_bucketed": partial(bench.etl_pipeline_bench, bucketed=True),
-}
+BENCH_ROWS = {"etl_pipeline_two_stage": bench.etl_pipeline_bench}
 
 
 def _pass(spark, fn, sf_dir: str):

@@ -3,8 +3,8 @@
 The 100 TB design claims (bounded shuffles, broadcast discipline,
 one-scan-per-table sweeps) have so far been argued from plan audits;
 this records one real scaling axis.  It runs `etl_pipeline_two_stage`
-(with per-step rows/bytes via `EtlPipeline(io_metrics=True)`) and
-`dq_sweep_detail` at three data points:
+(with the pipeline's per-step rows/bytes) and `dq_sweep_detail` at
+three data points:
 
 - sf0.01 and sf0.1 — the driver fixtures as-is;
 - "sf0.5eq" — the sandbox holds no sf0.5 fixture, so the largest point
@@ -16,9 +16,9 @@ this records one real scaling axis.  It runs `etl_pipeline_two_stage`
   paths; value distributions per customer are unchanged by
   construction.
 
-Timing is io_metrics=ON at every point so the points are mutually
-comparable (the tally's ~9% tax — PLANS.md round-5 adjudication — is
-constant across scales and cancels out of the curve's shape).
+Every point times the ETL with its per-step tally on, as the CLI
+runs it: job-group tagging plus one status-store read per run, no
+Spark job of its own.
 
 Usage: python tools/scale_curve.py   (writes markdown to stdout)
 Sections: default = etl + clusters; SPARK_GRAFT_SCALE_ONLY=etl|clusters
@@ -191,8 +191,8 @@ def main() -> None:
             ("sf0.1", "/root/testdata/sf0.1"),
             ("sf0.5eq", scaled_dir),
         ]
-        # warmup the ETL codegen/committer paths once at the smallest sf
-        etl_pipeline_bench(spark, "/root/testdata/sf0.001", io_metrics=True)
+        # warmup the ETL codegen/committer paths once at the smallest point
+        etl_pipeline_bench(spark, points[0][1])
 
         results = {}
         for label, d in points:
@@ -201,9 +201,7 @@ def main() -> None:
             rows = 0
             for _ in range(reps):
                 metrics = []  # keep the metrics of the LAST rep
-                sec, rows = etl_pipeline_bench(
-                    spark, d, io_metrics=True, metrics_out=metrics
-                )
+                sec, rows = etl_pipeline_bench(spark, d, metrics_out=metrics)
                 etl_samples.append(round(sec, 3))
             dq_samples = time_dq(spark, d, reps)
             results[label] = {
